@@ -40,22 +40,10 @@ object Bench {
   // ---------- shared by parent fallback and child ----------
 
   private def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // a fresh session per pass: clear any stopped session handles first
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // ns-as-long support if a TIMESTAMP(NANOS) events fixture returns
-      // (encoding has flipped across regenerations; harmless on µs files)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // UTC pin (ADVICE r10): Tables.epochMicros's NTZ branch and the
-      // calendar functions in q50 must not depend on the host timezone
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     // RDD.unpersist logs a WARN ("locally checkpointed ... cannot be
     // recomputed after unpersisting") on EVERY release of a localCheckpoint
     // — including the deliberate single-owner releases Scoped/clearStorage
@@ -239,7 +227,7 @@ object Bench {
     * query's NoSuchMethodError/SOE must be reported as that query's error,
     * not kill the whole pass. */
   private def pass(spark: SparkSession, dir: String): Seq[(String, Double, Option[String])] = {
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val only = SparkEntry.onlyFromEnv("bench")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
@@ -484,6 +472,7 @@ object Bench {
       case Some(out) => childMain(out); return
       case None => ()
     }
+    SparkEntry.onlyFromEnv("bench") // a bad filter fails here, before any pass JVM starts
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = math.max(1, sys.env.get("SPARK_GRAFT_RUNS")
       .flatMap(_.toIntOption).getOrElse(3))

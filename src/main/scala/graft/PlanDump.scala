@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md — the captured physical plans of EVERY catalog
   * query (plan-shape documentation backing SCALING.md's claims; the
   * binding assertions live in PlanSpec).
@@ -120,14 +118,7 @@ object PlanDump {
     val rest = SparkEntry.queries.keySet.diff(headline.toSet).toSeq
       .sortBy(n => ("""\d+""".r.findFirstIn(n).map(_.toInt).getOrElse(999), n))
     val names = if (args.length > 1) args(1).split(",").toSeq else headline ++ rest
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(cpus = 4, logLevel = "ERROR")
     val sb = new StringBuilder(
       s"""# PLANS — captured physical plans of ALL catalog queries (${new java.io.File(dir).getName}, AQE initial)
          |

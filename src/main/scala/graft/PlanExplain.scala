@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` output for the named catalog queries to
   * individual files — the per-round optimization evidence trail
   * (`plans/r<N>/<query>_{before,after}.txt`).
@@ -17,14 +15,7 @@ object PlanExplain {
     val names = args(2).split(",").toSeq
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.001"
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(cpus = 4, logLevel = "ERROR")
     names.foreach { n =>
       // pseudo-name for q252's pre-checkpoint seam: the catalog frame sits
       // above a localCheckpoint, so the Generate shape the explodeLean rule

@@ -31,4 +31,27 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     catalogs.collect { case (n, _, Some(sql)) => n -> sql }.toMap
+
+  /** A `SPARK_GRAFT_ONLY` value (comma-separated query names, a filter
+    * for local iteration) as the set of queries to run; None (run all)
+    * when unset. Unknown or empty names are an error: a
+    * typo'd filter would otherwise run zero queries and print a
+    * clean-looking result. */
+  private[graft] def parseOnly(raw: Option[String],
+      known: collection.Set[String]): Either[String, Option[Set[String]]] =
+    raw match {
+      case None => Right(None)
+      case Some(v) =>
+        val names = v.split(",", -1).toSet
+        val bad = names.filterNot(known) // "" is never a query name
+        if (bad.isEmpty) Right(Some(names))
+        else Left("SPARK_GRAFT_ONLY names unknown or empty queries: " +
+          bad.toSeq.sorted.map(n => s"'$n'").mkString(", "))
+    }
+
+  /** [[parseOnly]] over the environment, for Bench and Verify: a bad
+    * value exits with status 2 before any query runs. */
+  def onlyFromEnv(tag: String): Option[Set[String]] =
+    parseOnly(sys.env.get("SPARK_GRAFT_ONLY"), queries.keySet).fold(
+      msg => { System.err.println(s"[$tag] $msg"); sys.exit(2) }, identity)
 }

@@ -1,20 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = SparkEntry.onlyFromEnv("verify")
+    val spark = Session.build()
     new java.io.File(outDir).mkdirs()
     // queries are independent — run 4 at a time so Spark's scheduler
     // overlaps their stages (FIFO pools; local[] has the cores to spare)
@@ -22,19 +14,6 @@ object Verify {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    // local-iteration filter (same contract as Bench): run only the named
-    // queries; the driver never sets this, so the gate always runs all.
-    // Unknown names fail FAST — a typo'd filter would otherwise run zero
-    // queries and print a clean-looking "0/0 ok" pass
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty || names.isEmpty) {
-        System.err.println(s"[verify] SPARK_GRAFT_ONLY names unknown queries: " +
-          s"${unknown.toSeq.sorted.mkString(", ")} (or is empty)")
-        sys.exit(2)
-      }
-    }
     val futures = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>

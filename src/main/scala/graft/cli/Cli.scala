@@ -15,20 +15,7 @@ import graft.search.Search
   * zero-egress, Spark-native serving layer (SURVEY.md §2.1).
   */
 object Cli {
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // UTC pin (ADVICE r10): timestamp-epoch arithmetic and calendar
-      // rendering must not depend on the host timezone
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  def session(): SparkSession = graft.Session.build()
 }
 
 /** `RankPages <corpus> <outDir>` — ingest, build graph, run PageRank to the
@@ -40,6 +27,15 @@ object RankPages {
     * exercises the CLI's OWN code path and artifacts, not a replica. */
   def pipeline(spark: SparkSession, input: String, out: String): PageRank.Result = {
     val docs = WikiCorpus.ingest(spark, input).cache()
+    val res = rank(docs, out)
+    docs.unpersist()
+    res
+  }
+
+  /** Stages B–D over an ingested `docs` frame: graph, PageRank, then the
+    * docs/pr/ranked sinks. `docs` is read by the graph build and again by
+    * its sink, so callers pass it cached. */
+  def rank(docs: DataFrame, out: String): PageRank.Result = {
     val graph = GraphBuilder.build(docs.select(col("title"), col("links")))
     val res = PageRank.run(graph)
     docs.write.mode("overwrite").parquet(s"$out/docs")
@@ -48,7 +44,6 @@ object RankPages {
     PageRank.ranked(res.graph)
       .select(concat_ws("\t", col("title"), col("pr")))
       .write.mode("overwrite").text(s"$out/ranked")
-    docs.unpersist()
     res
   }
 
@@ -71,10 +66,12 @@ object BuildIndex {
     * (/root/reference/src/main/scala/invertedIndex.scala:101-123): the
     * gate drives the CLI's OWN code path and reads back its OWN `ii`
     * Parquet serving artifact, not a library replica. */
-  def pipeline(spark: SparkSession, input: String, out: String): Unit = {
-    val docs = WikiCorpus.ingest(spark, input)
+  def pipeline(spark: SparkSession, input: String, out: String): Unit =
+    index(WikiCorpus.ingest(spark, input), out)
+
+  /** The index build over an ingested `docs` frame, written to `out/ii`. */
+  def index(docs: DataFrame, out: String): Unit =
     InvertedIndex.build(docs).write.mode("overwrite").parquet(s"$out/ii")
-  }
 
   def main(args: Array[String]): Unit = {
     val Array(input, out) = args.take(2)
@@ -85,29 +82,19 @@ object BuildIndex {
 }
 
 /** `RunAll <corpus> <outDir> [term…]` — the whole reference workflow in
-  * one invocation: ingest → graph → PageRank → index → serving tables,
-  * then (optionally) a search over the freshly built tables. One Spark
-  * session, shared docs scan across the rank and index branches. */
+  * one invocation: the RankPages and BuildIndex stages over one cached
+  * docs scan, then (optionally) a search over the freshly written tables. */
 object RunAll {
-  def main(args: Array[String]): Unit = {
-    val Array(input, out) = args.take(2)
-    val terms = args.drop(2).toSeq
-    val spark = Cli.session()
+  /** Everything `main` does except stopping the session; prints the
+    * iteration line and one `term \t title \t score` line per search hit. */
+  def run(spark: SparkSession, input: String, out: String, terms: Seq[String]): Unit = {
     val docs = WikiCorpus.ingest(spark, input).cache()
-    val graph = GraphBuilder.build(docs.select(col("title"), col("links")))
-    val res = PageRank.run(graph)
-    docs.write.mode("overwrite").parquet(s"$out/docs")
-    res.graph.select(col("title"), col("pr"))
-      .write.mode("overwrite").parquet(s"$out/pr")
-    PageRank.ranked(res.graph)
-      .select(concat_ws("\t", col("title"), col("pr")))
-      .write.mode("overwrite").text(s"$out/ranked")
-    InvertedIndex.build(docs).write.mode("overwrite").parquet(s"$out/ii")
+    val res = RankPages.rank(docs, out)
+    BuildIndex.index(docs, out)
     println(s"pipeline done: iterations=${res.iterations} avgChange=${res.avgChange}")
     if (terms.nonEmpty) {
-      val n = docs.count()
       val hits = Search.search(spark,
-        terms, n,
+        terms, docs.count(),
         spark.read.parquet(s"$out/ii"),
         spark.read.parquet(s"$out/pr"),
         spark.read.parquet(s"$out/docs"))
@@ -116,6 +103,14 @@ object RunAll {
           f"${r.getAs[Double]("score")}%.6f")
       }
     }
+    docs.unpersist()
+    res.release()
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Array(input, out) = args.take(2)
+    val spark = Cli.session()
+    run(spark, input, out, args.drop(2).toSeq)
     spark.stop()
   }
 }

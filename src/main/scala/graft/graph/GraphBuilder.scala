@@ -29,18 +29,12 @@ object GraphBuilder {
 
   /** docs: DataFrame(title: string, links: array<string>) — raw extracted
     * links, possibly referencing non-existent pages, possibly duplicated.
-    * Returns graph(title, links, pr) with the semantics above.
-    *
-    * `materializeNullLinks`: with true (default, parity/inspection mode)
-    * the NULL row carries the full sorted title list — the reference's
-    * literal shape, required by the q24 oracle. With false the NULL row's
-    * links are the EMPTY array and its edge set ("NULL links to every
-    * page") stays implicit — at web scale the materialized variant is a
-    * single multi-GB row built through a single-reducer collect_set, the
-    * one remaining hot-key array; [[graft.pagerank.PageRank]] never reads
-    * it (the NULL fan-out is computed analytically from pr(NULL) and N),
-    * so the implicit variant produces the identical fixpoint. */
-  def build(docs: DataFrame, materializeNullLinks: Boolean = true): DataFrame = {
+    * Returns graph(title, links, pr) with the semantics above. The NULL
+    * row carries the full sorted title list — the reference's literal
+    * shape, required by the q24 oracle; [[graft.pagerank.PageRank]] never
+    * reads it (the NULL fan-out is computed analytically from pr(NULL)
+    * and N). */
+  def build(docs: DataFrame): DataFrame = {
     val titles = docs.select(col("title")).distinct()
 
     val edges = docs
@@ -55,13 +49,8 @@ object GraphBuilder {
       .select(col("title"),
         coalesce(col("links"), array(lit(NullVertex))).as("links"))
 
-    val nullLinks =
-      if (materializeNullLinks)
-        titles.agg(sort_array(collect_set(col("title"))).as("links"))
-          .select(lit(NullVertex).as("title"), col("links"))
-      else
-        docs.sparkSession.range(1).select(lit(NullVertex).as("title"),
-          array().cast("array<string>").as("links"))
+    val nullLinks = titles.agg(sort_array(collect_set(col("title"))).as("links"))
+      .select(lit(NullVertex).as("title"), col("links"))
 
     withDangling.unionByName(nullLinks).withColumn("pr", lit(1.0))
   }

@@ -140,14 +140,6 @@ object PageRank {
     Result(g, i, avg)
   }
 
-  /** GraphX/RDD-iterative alternate backend (BASELINE.md's named
-    * approach) — same semantics, same Result API; see [[PregelBackend]]
-    * for the stock-Pregel caveat and the parity argument. */
-  def runPregel(graph0: DataFrame, minIter: Int = 10, tol: Double = 0.2,
-      maxIter: Int = 50, alpha: Double = 0.15,
-      quantize: Option[Double] = None): Result =
-    PregelBackend.run(graph0, minIter, tol, maxIter, alpha, quantize)
-
   /** Final ranked relation (ref T1) — a true global order via Spark's
     * range-partitioned sort (strictly better than the reference's
     * per-partition MR sort, SURVEY §2.5 T1). */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{Scoped, Tables}
 import graft.core.Portable.explodeLean
 import graft.graph.GraphBuilder
-import graft.pagerank.PageRank
+import graft.pagerank.{PageRank, PregelBackend}
 
 /** The reference's search-engine capabilities re-expressed over the
   * driver fixtures: tokenization (ref P4), inverted index with df cutoff
@@ -828,14 +828,14 @@ object CorpusSearch {
       Some(keyGraphFixed10Sql)),
 
     // ---- the SAME fixed-10 quantized iteration through the GraphX/RDD
-    // backend (PageRank.runPregel): one oracle, two engines — a bench line
+    // backend (PregelBackend.run): one oracle, two engines — a bench line
     // comparing the DataFrame loop (q29) and the edge-partitioned
     // aggregateMessages loop (q47) on the identical graph, both hash-gated
     // against the identical recursive CTE.
     ("q47_pagerank_pregel",
       (s: SparkSession, dir: String) => {
         val g0 = GraphBuilder.build(keyGraphDocs(s, dir))
-        val res = PageRank.runPregel(g0, minIter = 10, tol = 0.0, maxIter = 10,
+        val res = PregelBackend.run(g0, minIter = 10, tol = 0.0, maxIter = 10,
           quantize = Some(1e9))
         Scoped.releaseAfterUse(res.graph)
         res.graph.select(col("title"), col("pr")).orderBy(col("title"))

@@ -20,17 +20,15 @@ import org.apache.spark.sql.functions._
   *
   * Parity mode (SURVEY §1.4 #10): the reference prints results in posting
   * order — terms in input order, postings in title order, NO score sort and
-  * no dedup across terms. `search(..., sortByScore = false)` reproduces that
-  * exactly via (term_idx, posting ordinal); `sortByScore = true` is our
-  * documented extension.
+  * no dedup across terms. `search` reproduces that exactly via (term_idx,
+  * posting ordinal); score ranking is the `searchRanked` extension.
   */
 object Search {
 
   /** index: ii(term, df, postings); pr: (title, pr); docs: (title, line).
     * Returns (term, title, tf, df, pr, score, snippets). */
   def search(spark: SparkSession, terms: Seq[String], docCount: Long,
-      index: DataFrame, pr: DataFrame, docs: DataFrame,
-      sortByScore: Boolean = false): DataFrame = {
+      index: DataFrame, pr: DataFrame, docs: DataFrame): DataFrame = {
     import spark.implicits._
     val q = terms.zipWithIndex.toDF("term", "term_idx")
 
@@ -38,7 +36,7 @@ object Search {
     // scan (row-group skipping on the term column), so a point query reads
     // a sliver of the index instead of all postings; the tiny q DF joins
     // back after only to attach the term ordinal.
-    val hits = index.filter(col("term").isin(terms: _*)).join(q, Seq("term"))
+    index.filter(col("term").isin(terms: _*)).join(q, Seq("term"))
       .select(col("term"), col("term_idx"), col("df"),
         posexplode(col("postings")).as(Seq("pos", "p")))
       .select(col("term"), col("term_idx"), col("pos"), col("df"),
@@ -62,9 +60,7 @@ object Search {
                cast(o.char_off + 30 - greatest(o.char_off - 20, 0) as int)))"""))
       .select(col("term"), col("term_idx"), col("pos"), col("title"),
         col("tf"), col("df"), col("pr"), col("score"), col("snippets"))
-
-    if (sortByScore) hits.orderBy(desc("score"), asc("term_idx"), asc("title"))
-    else hits.orderBy(asc("term_idx"), asc("pos"))
+      .orderBy(asc("term_idx"), asc("pos"))
   }
 
   /** Extension (flagged OFF the parity path, SURVEY §7.2-4): disjunctive

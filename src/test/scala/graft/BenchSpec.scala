@@ -156,4 +156,18 @@ class BenchSpec extends AnyFunSuite {
     // single sample: median = p90 = the sample
     assert(Bench.interiorStats(Seq(0.08)) == ((0.08, 0.08, 1)))
   }
+
+  test("SPARK_GRAFT_ONLY: unset runs all; unknown or empty names are rejected") {
+    val known = Set("q01_a", "q02_b")
+    assert(SparkEntry.parseOnly(None, known) == Right(None))
+    assert(SparkEntry.parseOnly(Some("q02_b"), known) == Right(Some(Set("q02_b"))))
+    assert(SparkEntry.parseOnly(Some("q01_a,q02_b"), known) ==
+      Right(Some(Set("q01_a", "q02_b"))))
+    assert(SparkEntry.parseOnly(Some("q01_a,q2_typo"), known) ==
+      Left("SPARK_GRAFT_ONLY names unknown or empty queries: 'q2_typo'"))
+    Seq("", ",", "q01_a,", ",q01_a", "q01_a,,q02_b").foreach { v =>
+      assert(SparkEntry.parseOnly(Some(v), known) ==
+        Left("SPARK_GRAFT_ONLY names unknown or empty queries: ''"), v)
+    }
+  }
 }

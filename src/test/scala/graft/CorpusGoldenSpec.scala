@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.corpus.WikiCorpus
 import graft.graph.GraphBuilder
 import graft.index.InvertedIndex
-import graft.pagerank.PageRank
+import graft.pagerank.{PageRank, PregelBackend}
 import graft.search.Search
 
 /** Golden 3-doc corpus (FIXTURES.md §1a, from the reference's worked
@@ -204,27 +204,10 @@ class CorpusGoldenSpec extends SparkSpec {
     assert(hits("tend") === line.substring(70))      // runs to line end: 34 chars
   }
 
-  test("implicit-NULL graph variant reaches the identical fixpoint") {
-    val in = docs.select(col("title"), col("links"))
-    val materialized = shortRun(GraphBuilder.build(in))
-    val implicitNull = shortRun(GraphBuilder.build(in, materializeNullLinks = false))
-    assert(implicitNull.iterations === materialized.iterations)
-    val a = materialized.graph.select("title", "pr").collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val b = implicitNull.graph.select("title", "pr").collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(a === b)
-    // and the implicit variant really carries no giant array
-    val nullLinks = GraphBuilder.build(in, materializeNullLinks = false)
-      .filter(col("title") === GraphBuilder.NullVertex)
-      .select("links").head().getSeq[String](0)
-    assert(nullLinks.isEmpty)
-  }
-
   test("GraphX/RDD backend agrees with the DataFrame loop to 1e-9") {
     val g0 = GraphBuilder.build(docs.select(col("title"), col("links")))
     val df = shortRun(g0)
-    val px = PageRank.runPregel(g0, minIter = 5, maxIter = 5)
+    val px = PregelBackend.run(g0, minIter = 5, maxIter = 5)
     assert(px.iterations === df.iterations)
     // identical Δ counter ⇒ identical stop decision under any policy
     assert(math.abs(px.avgChange - df.avgChange) < 1e-9)
