@@ -65,11 +65,11 @@ object PlanDump {
     "q155_phrase_search", "q156_weighted_sample",
     "q157_embedding_covariance", "q161_knn_label_eval", "q165_term_pmi",
     // r15 (VERDICT r14 #4 — cost-frontier captures): four-pass drift
-    // profile (q143), iterative BFS frontier expansion (q168), encoding
-    // advisor's per-column sweep (q170), LSH-bounded provenance flow
-    // (q171), histogram-quartile outlier fences (q172), batched hybrid
-    // retrieval's WindowGroupLimit top-Ks (q173)
-    "q143_profile_drift", "q168_bfs_levels", "q170_encoding_advisor",
+    // profile (q143), encoding advisor's per-column sweep (q170),
+    // LSH-bounded provenance flow (q171), histogram-quartile outlier
+    // fences (q172), batched hybrid retrieval's WindowGroupLimit top-Ks
+    // (q173)
+    "q143_profile_drift", "q170_encoding_advisor",
     "q171_source_dup_flow", "q172_outlier_fences_hist",
     "q173_hybrid_rrf_batch",
     // r15 additions: calibration's 10-bin agg (q174), the bootstrap's
@@ -81,10 +81,9 @@ object PlanDump {
     // (q178), SRP-cell hard-negative mining's WindowGroupLimit top-3
     // (q179)
     "q178_containment_dup", "q179_hard_negatives",
-    // r15: HITS's per-iteration join+partial-agg pair and 1-row
-    // broadcast normalization (q180); winnowing's map-side fingerprint
-    // HOF + candidates-then-intersect verify (q181)
-    "q180_hits", "q181_winnowing_overlap",
+    // r15: winnowing's map-side fingerprint HOF + candidates-then-
+    // intersect verify (q181)
+    "q181_winnowing_overlap",
     // r15: LPA's per-iteration double aggregate (count -> encoded max)
     "q184_lpa_communities",
     // r16 (VERDICT r15 #3 — the six newest operators): k-anonymity's

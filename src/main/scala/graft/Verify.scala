@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val (sfDir, outDir) =
+      cli.Cli.orExit(cli.Cli.twoArgs(args, "usage: Verify <sfDir> <outDir>"))
     val only = SparkEntry.onlyFromEnv("verify")
     val spark = Session.build()
     new java.io.File(outDir).mkdirs()

@@ -16,6 +16,17 @@ import graft.search.Search
   */
 object Cli {
   def session(): SparkSession = graft.Session.build()
+
+  /** The two leading positional arguments, or the usage line when fewer
+    * were given; arguments after them are left to the caller. */
+  private[graft] def twoArgs(args: Array[String], usage: String)
+      : Either[String, (String, String)] =
+    if (args.length >= 2) Right((args(0), args(1))) else Left(usage)
+
+  /** The parsed arguments, or exit with status 2 and the usage line on
+    * stderr — the `SPARK_GRAFT_ONLY` convention for a bad command line. */
+  private[graft] def orExit[A](parsed: Either[String, A]): A =
+    parsed.fold(usage => { System.err.println(usage); sys.exit(2) }, identity)
 }
 
 /** `RankPages <corpus> <outDir>` — ingest, build graph, run PageRank to the
@@ -48,7 +59,7 @@ object RankPages {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(input, out) = args.take(2)
+    val (input, out) = Cli.orExit(Cli.twoArgs(args, "usage: RankPages <corpus> <outDir>"))
     val spark = Cli.session()
     val res = pipeline(spark, input, out)
     println(s"iterations=${res.iterations} avgChange=${res.avgChange}")
@@ -74,7 +85,7 @@ object BuildIndex {
     InvertedIndex.build(docs).write.mode("overwrite").parquet(s"$out/ii")
 
   def main(args: Array[String]): Unit = {
-    val Array(input, out) = args.take(2)
+    val (input, out) = Cli.orExit(Cli.twoArgs(args, "usage: BuildIndex <corpus> <outDir>"))
     val spark = Cli.session()
     pipeline(spark, input, out)
     spark.stop()
@@ -108,7 +119,8 @@ object RunAll {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(input, out) = args.take(2)
+    val (input, out) =
+      Cli.orExit(Cli.twoArgs(args, "usage: RunAll <corpus> <outDir> [term...]"))
     val spark = Cli.session()
     run(spark, input, out, args.drop(2).toSeq)
     spark.stop()
@@ -121,11 +133,25 @@ object RunAll {
   * results with ±20/+30-char snippets. `--ranked` switches to the
   * extension: per-title merged scores, top-20, score-descending. */
 object SearchCli {
+  final case class Args(serveDir: String, docCount: Long, ranked: Boolean,
+      terms: Seq[String])
+
+  val Usage = "usage: SearchCli <serveDir> <docCount> [--ranked] <term> [term...]"
+
+  /** `<docCount>` must be an integer and at least one term must follow;
+    * `--ranked` may sit anywhere after `<docCount>`. */
+  def parse(args: Array[String]): Either[String, Args] = {
+    val rest = args.drop(2)
+    val terms = rest.filterNot(_ == "--ranked").toSeq
+    args.lift(1).flatMap(_.toLongOption) match {
+      case Some(docCount) if terms.nonEmpty =>
+        Right(Args(args(0), docCount, rest.contains("--ranked"), terms))
+      case _ => Left(Usage)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    val serveDir = args(0)
-    val docCount = args(1).toLong
-    val ranked = args.contains("--ranked")
-    val terms = args.drop(2).filterNot(_ == "--ranked").toSeq
+    val Args(serveDir, docCount, ranked, terms) = Cli.orExit(parse(args))
     val spark = Cli.session()
     val ii = spark.read.parquet(s"$serveDir/ii")
     val pr = spark.read.parquet(s"$serveDir/pr")

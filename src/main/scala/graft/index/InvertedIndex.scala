@@ -42,6 +42,15 @@ object InvertedIndex {
       .select(col("t._1").as("term"), col("title"),
         col("line_offset").as("line_off"), col("t._2").cast("long").as("char_off"))
 
+  /** Level-1 aggregation: occurrences → one row per (term, title) with tf
+    * and document-ordered offsets — shared by [[build]] and [[merge]] so
+    * the posting shape cannot drift between the batch and incremental
+    * paths. */
+  private def postingsByDoc(occ: DataFrame): DataFrame =
+    occ.groupBy(col("term"), col("title"))
+      .agg(count(lit(1)).cast("int").as("tf"),
+        sort_array(collect_list(struct(col("line_off"), col("char_off")))).as("ofs"))
+
   /** Full index build with the df cutoff.
     *
     * The cutoff is applied BEFORE postings assembly, not only after: df
@@ -52,15 +61,6 @@ object InvertedIndex {
     * occurrences), so the semi-join skips building exactly the giant
     * postings arrays that would be thrown away. The distinct+count
     * pre-pass is map-side-combined and cheap by comparison. */
-  /** Level-1 aggregation: occurrences → one row per (term, title) with tf
-    * and document-ordered offsets — shared by [[build]] and [[merge]] so
-    * the posting shape cannot drift between the batch and incremental
-    * paths. */
-  private def postingsByDoc(occ: DataFrame): DataFrame =
-    occ.groupBy(col("term"), col("title"))
-      .agg(count(lit(1)).cast("int").as("tf"),
-        sort_array(collect_list(struct(col("line_off"), col("char_off")))).as("ofs"))
-
   def build(docs: DataFrame, dfCutoff: Int = DefaultDfCutoff): DataFrame = {
     val occ = occurrences(docs)
     val keep = occ.select(col("term"), col("title")).distinct()

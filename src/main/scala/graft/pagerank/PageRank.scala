@@ -70,9 +70,12 @@ object PageRank {
     // pr(NULL)/V as a 1-row broadcast — the analytic stand-in for exploding
     // NULL's V-element links array (V = n − 1 pages).
     // (global agg, not a filter+select, so the result is always exactly one
-    // row — 0.0 when the graph happens to carry no NULL vertex)
+    // row — 0.0 when the graph happens to carry no NULL vertex). With no
+    // pages (n ≤ 1: an empty or title-less corpus) NULL has no out-edges,
+    // so its share is 0 — and ANSI mode would reject the division by 0.
+    val share = if (n > 1) col("pr") / lit((n - 1).toDouble) else lit(0.0)
     val nullContrib = g.agg(
-      sum(when(col("title") === NullVertex, col("pr") / lit((n - 1).toDouble))
+      sum(when(col("title") === NullVertex, share)
         .otherwise(lit(0.0))).as("null_contrib"))
     val contribs = pages
       .select(explode(col("links")).as("title"),

@@ -151,176 +151,13 @@ object CorpusSearch {
           WHERE x.iter IS NOT NULL)
         SELECT title, pr FROM pr WHERE iter = 10 ORDER BY title"""
 
-  /** HyperBall register walk over the key graph — q212's pinned byte-
-    * vector shape (see the q212 catalog header for the A/B record): one
-    * 64-byte register vector per vertex, max-merged along edges per hop
-    * in a typed reduceGroups, exploded to (v, reg, r) rows per hop for
-    * the SQL-side estimator arithmetic. Monotone fixed-point early-stop
-    * via the (occupied cells, exact Σ 2^(27−r)) digest: once the state
-    * saturates, later hop entries are the SAME DataFrame handle (values
-    * equal by definition — the oracle computes every hop explicitly, so
-    * parity holds). Returns the four per-hop row tables s0..s3, each
-    * localCheckpoint'ed — the CALLER owns their release (over distinct
-    * handles only) — paired with its (occupied cells, Σ 2^(27−r))
-    * digest so consumers read occupancy without re-aggregating. Shared
-    * by q212 (neighborhood function) and q223 (harmonic centrality):
-    * one walk, two gated surfaces. */
-  private def hyperballHopRows(s: SparkSession, dir: String)
-      : IndexedSeq[(DataFrame, (Long, Long))] = {
-    import s.implicits._
-    val li = t(s, dir, "lineitem")
-    val edges = li.select((col("l_orderkey") % 997).as("src"),
-      (col("l_partkey") % 997).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
-    val verts = edges.select(col("src").as("v"))
-      .union(edges.select(col("dst").as("v"))).distinct()
-      .localCheckpoint()
-    Scoped.releaseAfterUse(edges, verts)
-    // R_0: each vertex's own 32-bit md5 hash → (register, rank)
-    val init = verts
-      .select(col("v"), graft.core.Portable.hash32(col("v").cast("string")).as("h"))
-      .select(col("v"), (col("h") % 64).as("reg"), expr("h div 64").as("w"))
-      .select(col("v"), col("reg"),
-        when(col("w") === 0L, lit(27L))
-          .otherwise(lit(27L) - length(expr("bin(w)"))).as("r"))
-    def mergeB(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-      val out = a.clone()
-      var j = 0
-      while (j < 64) { if (b(j) > out(j)) out(j) = b(j); j += 1 }
-      out
-    }
-    def rowsOf(state: DataFrame): DataFrame = state
-      .as[(Long, Array[Byte])]
-      .flatMap { case (v, regs) =>
-        regs.iterator.zipWithIndex
-          .collect { case (r, j) if r != 0 => (v, j.toLong, r.toLong) }
-      }.toDF("v", "reg", "r")
-    // (occupied cells, exact Σ 2^(27−r)) is a perfect state digest
-    // under max-merge monotonicity: cells are only ever added (occ
-    // fixed ⇒ same cell set) and each cell's 2^(27−r) term strictly
-    // decreases when its r rises (sum fixed over the same cells ⇒
-    // every cell unchanged) — so digest-equal ⇔ state-identical.
-    def digestOf(rs: DataFrame): (Long, Long) = {
-      val row = rs.agg(count(lit(1)),
-        sum(expr("shiftleft(1L, cast(27 - r as int))"))).head()
-      (row.getLong(0), row.getLong(1))
-    }
-    var state = init.as[(Long, Long, Long)]
-      .map { case (v, reg, r) =>
-        val regs = new Array[Byte](64); regs(reg.toInt) = r.toByte
-        (v, regs)
-      }.toDF("v", "regs").localCheckpoint()
-    val r0 = rowsOf(state).localCheckpoint()
-    val hops = scala.collection.mutable.ArrayBuffer((r0, digestOf(r0)))
-    var fixed = false
-    for (_ <- 1 to 3) {
-      if (!fixed) {
-        val nextState = state.union(
-          edges.join(state.withColumnRenamed("v", "dst"), Seq("dst"))
-            .select(col("src").as("v"), col("regs")))
-          .as[(Long, Array[Byte])]
-          .groupByKey(_._1)
-          .reduceGroups((x, y) => (x._1, mergeB(x._2, y._2)))
-          .map { case (v, (_, regs)) => (v, regs) }
-          .toDF("v", "regs")
-          .localCheckpoint()
-        Scoped.free(state); state = nextState
-        val rn = rowsOf(state).localCheckpoint()
-        val nextDig = digestOf(rn)
-        fixed = nextDig == hops.last._2
-        hops += ((rn, nextDig))
-      } else hops += hops.last
-    }
-    Scoped.free(state)
-    hops.toIndexedSeq
-  }
-
-  /** Shared constant of the hyperball estimator: alpha_64 = 0.709;
-    * C = a·64²·2^27 (17-digit literal, bit-identical cross-engine). */
-  private val HyperballC = "389776872046.59198"
-
-  /** Per-vertex corrected-HLL estimate of a hop's (v, reg, r) row
-    * table — raw C/S switched to linear counting m·ln(m/V) in the
-    * small range (|B(v,0)| = 1 always sits there; ln parity is the
-    * pinned q187/q191 discipline); one estimate column named `name`. */
-  private def hyperballEstCol(rs: DataFrame, name: String): DataFrame = rs
-    .groupBy(col("v"))
-    .agg(count(lit(1)).as("hit"),
-      sum(expr("shiftleft(1L, cast(27 - r as int))")).as("sh"))
-    .select(col("v"),
-      (lit(HyperballC).cast("double")
-        / (col("sh") + (lit(64L) - col("hit")) * lit(1L << 27))
-          .cast("double")).as("raw"),
-      (lit(64L) - col("hit")).as("vz"))
-    .select(col("v"), floor(
-      when(col("vz") > 0L && col("raw") <= 160.0,
-        lit(64.0) * log(lit(64.0) / col("vz").cast("double")))
-        .otherwise(col("raw")) + 0.5).cast("long").as(name))
-
-  /** Σ estimate per hop for q212/q225, memoized over DISTINCT DataFrame
-    * handles: fixed-point padding repeats the LAST hop's handle, so the
-    * aggregation must run once per distinct state, not once per hop row
-    * (ADVICE r18). SUM over an empty key graph is NULL → 0, never NPE. */
-  private def hyperballHopSums(hops: IndexedSeq[(DataFrame, (Long, Long))])
-      : IndexedSeq[Long] = {
-    val memo = new java.util.IdentityHashMap[DataFrame, java.lang.Long]()
-    hops.map { case (rs, _) =>
-      memo.computeIfAbsent(rs, (k: DataFrame) => {
-        val v = hyperballEstCol(k, "est").agg(sum(col("est"))).head()
-          .getAs[java.lang.Long](0)
-        if (v == null) java.lang.Long.valueOf(0L) else v
-      }).longValue()
-    }
-  }
-
-  /** q231's power-method core, extracted so CentralityWalkSpec can pin
-    * it against analytic eigenvectors (the LogLogSmallRangeSpec
-    * pattern): x ← A·x over the given directed edge rows (symmetrize
-    * before calling for an undirected graph), L∞-normalized IN-PLAN via
-    * a broadcast 1-row max (no driver pull), every iterate quantized to
-    * the 1e-9 grid; a zero iterate short-circuits to 0.0. Vertices are
-    * src ∪ dst. Returns (v, x) with x the final normalized iterate. */
-  private[graft] def eigenWalk(edges: DataFrame, iters: Int): DataFrame = {
-    val verts = edges.select(col("src").as("v"))
-      .unionByName(edges.select(col("dst").as("v"))).distinct()
-      .localCheckpoint()
-    var x = verts.select(col("v"), lit(1.0).as("x"))
-    var prev: DataFrame = null
-    for (_ <- 1 to iters) {
-      // ONE checkpoint per round, on the two-consumer frame only (r22,
-      // VERDICT r21 #4 A/B): y feeds the L∞ max AND the normalize, so it
-      // materializes; the normalized iterate has a SINGLE consumer (the
-      // next round's join), so its former second checkpoint bought
-      // nothing but a per-round materialization job — measured 8.17 →
-      // see SCALING.md r22 walk-cadence A/B. Lineage stays bounded: each
-      // round's plan is one projection over the round's y checkpoint.
-      val y = verts.join(
-        edges.join(x.select(col("v").as("src"), col("x").as("xs")),
-          Seq("src"))
-          .groupBy(col("dst").as("v")).agg(sum(col("xs")).as("ys")),
-        Seq("v"), "left_outer")
-        .select(col("v"), coalesce(col("ys"), lit(0.0)).as("y"))
-        .localCheckpoint()
-      if (prev != null) Scoped.free(prev)
-      prev = y
-      x = y.crossJoin(broadcast(y.agg(max(col("y")).as("my"))))
-        .select(col("v"),
-          when(col("my") === 0.0, lit(0.0))
-            .otherwise(floor(col("y") / col("my") * 1e9 + 0.5) / 1e9)
-            .as("x"))
-    }
-    Scoped.releaseAfterUse(verts, prev)
-    x
-  }
-
-  /** q184's label-propagation core, extracted (the eigenWalk/katzWalk
-    * rationale) so q241 can score the SAME labeling it gates: from
-    * self-labels, `iters` rounds of most-frequent-neighbor-label with
-    * the deterministic (count, lowest-label) tiebreak packed into one
-    * max() key; per-round checkpoint, predecessor freed. Input is the
-    * directed-expanded (contact, target) row set; returns (v, label).
-    * The final state is released after its consumer's first action. */
+  /** q184's label-propagation core, extracted so q241 can score the SAME
+    * labeling it gates: from self-labels, `iters` rounds of
+    * most-frequent-neighbor-label with the deterministic (count,
+    * lowest-label) tiebreak packed into one max() key; per-round
+    * checkpoint, predecessor freed. Input is the directed-expanded
+    * (contact, target) row set; returns (v, label). The final state is
+    * released after its consumer's first action. */
   private[graft] def lpaLabels(dedges: DataFrame, iters: Int): DataFrame = {
     var state = dedges.select(col("target").as("v")).distinct()
       .select(col("v"), col("v").as("label"))
@@ -348,74 +185,6 @@ object CorpusSearch {
     Scoped.releaseAfterUse(prev)
     state
   }
-
-  /** q238's attenuated-walk core (same extraction rationale):
-    * x ← 1 + β·Aᵀx with β = 1/1024 exact, each iterate on the 1e-9
-    * grid; dangling vertices need no wiring (the +1 anchor). */
-  private[graft] def katzWalk(edges: DataFrame, iters: Int): DataFrame = {
-    val verts = edges.select(col("src").as("v"))
-      .unionByName(edges.select(col("dst").as("v"))).distinct()
-      .localCheckpoint()
-    val beta = lit(1.0) / lit(1024.0)
-    var x = verts.select(col("v"), lit(1.0).as("x"))
-    var prev: DataFrame = null
-    for (_ <- 1 to iters) {
-      val step = verts.join(
-        edges.join(x.select(col("v").as("src"), col("x").as("xs")),
-          Seq("src"))
-          .groupBy(col("dst").as("v")).agg(sum(col("xs")).as("mass")),
-        Seq("v"), "left_outer")
-        .select(col("v"),
-          (floor((lit(1.0) + beta * coalesce(col("mass"), lit(0.0)))
-            * 1e9 + 0.5) / 1e9).as("x"))
-      // cadence-2 checkpointing A/B'd and DECLINED (r22, VERDICT r21 #4):
-      // skipping alternate checkpoints measured flat-to-worse at sf1/32c
-      // (q238 5.76→5.89 s) — the per-round materialization is not the
-      // binding cost at this fixture, and the deeper lineage buys nothing
-      // (numbers in OPTIMIZATION_r22.md; q180's in-code note records the
-      // same decline for the HITS loop, q184's for LPA where the
-      // broadcast build re-executes the un-checkpointed round).
-      x = step.localCheckpoint()
-      if (prev != null) Scoped.free(prev)
-      prev = x
-    }
-    Scoped.releaseAfterUse(verts, prev)
-    x
-  }
-
-  /** DuckDB CTE prefix shared by the q212 and q223 oracles: the key
-    * graph (edges/verts), the hash init, and the four unrolled
-    * MATERIALIZED register-state hops s0..s3 (the q189 lesson: chained
-    * CTEs referenced twice must pin). */
-  private val hyperballCtes: String =
-    """edges AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey % 997 AS src, l_partkey % 997 AS dst
-          FROM lineitem WHERE l_orderkey % 997 <> l_partkey % 997),
-        verts AS MATERIALIZED (SELECT DISTINCT v FROM (
-          SELECT src AS v FROM edges UNION ALL SELECT dst FROM edges)),
-        h AS (SELECT v,
-            ('0x' || substr(md5(CAST(v AS VARCHAR)), 1, 8))::BIGINT AS hv
-          FROM verts),
-        s0 AS MATERIALIZED (SELECT v, hv % 64 AS reg,
-            CASE WHEN hv // 64 = 0 THEN 27
-                 ELSE 27 - len(bin(hv // 64)) END AS r
-          FROM h),
-        s1 AS MATERIALIZED (SELECT v, reg, MAX(r) AS r FROM (
-            SELECT * FROM s0
-            UNION ALL
-            SELECT e.src AS v, s.reg, s.r FROM edges e JOIN s0 s ON s.v = e.dst)
-          GROUP BY 1, 2),
-        s2 AS MATERIALIZED (SELECT v, reg, MAX(r) AS r FROM (
-            SELECT * FROM s1
-            UNION ALL
-            SELECT e.src AS v, s.reg, s.r FROM edges e JOIN s1 s ON s.v = e.dst)
-          GROUP BY 1, 2),
-        s3 AS MATERIALIZED (SELECT v, reg, MAX(r) AS r FROM (
-            SELECT * FROM s2
-            UNION ALL
-            SELECT e.src AS v, s.reg, s.r FROM edges e JOIN s2 s ON s.v = e.dst)
-          GROUP BY 1, 2)"""
-
 
   val catalog: Seq[(String, Q, Option[String])] = Seq(
 
@@ -901,410 +670,6 @@ object CorpusSearch {
         FROM pr WHERE iter = $it ORDER BY title"""
       }),
 
-    // ---- INCREMENTAL PageRank (warm-start re-rank after an edge
-    // delta): the production shape of the reference's flagship — a
-    // daily crawl adds links; re-ranking from the PREVIOUS converged
-    // ranks reaches a settled state in a fraction of the from-scratch
-    // iterations, because the perturbation is local and the old ranks
-    // are already near the new fixed point. Two new edges (n3→n17,
-    // n11→n5 — absent from the base adjacency by construction, targets
-    // existing) are injected into the nation fixture; the warm walk
-    // runs EXACTLY 4 quantized iterations (the q29 1e-9-grid
-    // discipline) from the 1e-9-quantized q25 base ranks, and a cold
-    // walk runs the same 4 iterations from the uniform init. The gate
-    // carries the warm ranks (1e-6 grid) AND both walks' settle
-    // counters Σ⌊|pr₄ − pr₃|·10⁹⌋ — warm ≪ cold is the measured claim,
-    // on the gate itself, not in prose. Oracle: THREE recursive walks
-    // in one WITH RECURSIVE (the q25 base chain verbatim, then the
-    // delta graph rebuilt through the same CTE shapes, then
-    // warm + cold quantized walks — the q219 multi-recursion pattern).
-    //
-    // Scale: at 100 TB the delta graph is built by patching the
-    // adjacency of TOUCHED vertices only (here the fixture rebuild is
-    // fixture-sized); each warm iteration is the same one-shuffle step
-    // as q25/q29, and the win is ITERATION COUNT — the warm walk stops
-    // at the convergence gate several rounds earlier, which is the
-    // whole-cluster cost that matters.
-    ("q221_incremental_pagerank",
-      (s: SparkSession, dir: String) => {
-        val g1 = GraphBuilder.build(nationGraphDocs(s, dir))
-        val base = PageRank.run(g1)
-        val baseQ = base.graph
-          .select(col("title"), (floor(col("pr") * 1e9 + 0.5) / 1e9).as("pr"))
-          .localCheckpoint()
-        base.release()
-        val docs2 = nationGraphDocs(s, dir).withColumn("links",
-          when(col("title") === "n3", concat(col("links"), array(lit("n17"))))
-            .when(col("title") === "n11", concat(col("links"), array(lit("n5"))))
-            .otherwise(col("links")))
-        val g2 = GraphBuilder.build(docs2).localCheckpoint()
-        val n = g2.count()
-        val edges = g2.select(col("title").as("src"),
-          explode(col("links")).as("dst"), size(col("links")).as("outdeg"))
-          .localCheckpoint()
-        // 4 fixed iterations on the 1e-9 grid (q29's step shape); returns
-        // (pr after 4, pr after 3) for the settle counter
-        def walk(init: DataFrame): (DataFrame, DataFrame) = {
-          var pr = init
-          var pr3: DataFrame = null
-          for (i <- 1 to 4) {
-            val mass = edges.join(pr.withColumnRenamed("title", "src"), Seq("src"))
-              .groupBy(col("dst").as("title"))
-              .agg(sum(col("pr") / col("outdeg")).as("mass"))
-            val next = g2.select(col("title"))
-              .join(mass, Seq("title"), "left_outer")
-              .select(col("title"),
-                (floor((lit(0.15) / n + lit(0.85) * coalesce(col("mass"), lit(0.0)))
-                  * 1e9 + 0.5) / 1e9).as("pr"))
-              .localCheckpoint()
-            if (i >= 2 && (pr ne pr3) && (pr ne init)) Scoped.free(pr)
-            if (i == 3) pr3 = next
-            pr = next
-          }
-          (pr, pr3)
-        }
-        val (w4, w3) = walk(baseQ)
-        val (c4, c3) = walk(g2.select(col("title"), lit(1.0).as("pr")))
-        def settle(a: DataFrame, b: DataFrame, kind: String) = a
-          .join(b.select(col("title"), col("pr").as("prev")), Seq("title"))
-          .agg(sum(floor(abs(col("pr") - col("prev")) * 1e9 + 0.5).cast("long"))
-            .as("v"))
-          .select(lit(kind).as("kind"), lit("ALL").as("title"), col("v"))
-        val warmRows = w4.select(lit("warm").as("kind"), col("title"),
-          floor(col("pr") * 1e6 + 0.5).cast("long").as("v"))
-        val out = warmRows
-          .unionByName(settle(w4, w3, "warm_settle"))
-          .unionByName(settle(c4, c3, "cold_settle"))
-          .orderBy(col("kind"), col("title"))
-        Scoped.releaseAfterUse(baseQ, g2, edges, w4, w3, c4, c3)
-        out
-      },
-      Some {
-        val it = NationFixtureIterations
-        s"""$nationPrRecursiveCtes,
-        docs2 AS (SELECT title,
-            CASE WHEN title = 'n3' THEN list_append(links, 'n17')
-                 WHEN title = 'n11' THEN list_append(links, 'n5')
-                 ELSE links END AS links
-          FROM docs),
-        rawedges2 AS (SELECT title AS src, unnest(links) AS dst FROM docs2),
-        realedges2 AS (SELECT DISTINCT src, dst FROM rawedges2
-                       WHERE dst IN (SELECT title FROM titles)),
-        adj2 AS (SELECT src AS title, list_sort(array_agg(dst)) AS links
-                 FROM realedges2 GROUP BY 1),
-        g2 AS (
-          SELECT t.title, COALESCE(a.links, ['NULL']) AS links
-          FROM titles t LEFT JOIN adj2 a ON t.title = a.title
-          UNION ALL
-          SELECT 'NULL' AS title,
-                 (SELECT list_sort(array_agg(title)) FROM titles) AS links),
-        verts2 AS (SELECT title FROM g2),
-        nn2 AS (SELECT COUNT(*) AS n FROM g2),
-        edges2b AS (SELECT title AS src, unnest(links) AS dst,
-            len(links) AS outdeg FROM g2),
-        wzero AS (SELECT title, floor(pr * 1e9 + 0.5) / 1e9 AS pr
-          FROM pr WHERE iter = $it),
-        wpr AS (
-          SELECT 0 AS t, title, pr FROM wzero
-          UNION ALL
-          SELECT * FROM (
-            SELECT CAST(COALESCE(m.t, MAX(m.t) OVER ()) AS INT) AS t,
-              v.title,
-              floor((0.15 / (SELECT n FROM nn2)
-                + 0.85 * COALESCE(m.mass, CAST(0.0 AS DOUBLE))) * 1e9 + 0.5)
-                / 1e9 AS pr
-            FROM verts2 v LEFT JOIN (
-              SELECT p.t + 1 AS t, e.dst AS title, SUM(p.pr / e.outdeg) AS mass
-              FROM wpr p JOIN edges2b e ON p.title = e.src
-              WHERE p.t < 4 GROUP BY 1, 2) m
-            ON v.title = m.title) x
-          WHERE x.t IS NOT NULL),
-        cpr AS (
-          SELECT 0 AS t, title, CAST(1.0 AS DOUBLE) AS pr FROM g2
-          UNION ALL
-          SELECT * FROM (
-            SELECT CAST(COALESCE(m.t, MAX(m.t) OVER ()) AS INT) AS t,
-              v.title,
-              floor((0.15 / (SELECT n FROM nn2)
-                + 0.85 * COALESCE(m.mass, CAST(0.0 AS DOUBLE))) * 1e9 + 0.5)
-                / 1e9 AS pr
-            FROM verts2 v LEFT JOIN (
-              SELECT p.t + 1 AS t, e.dst AS title, SUM(p.pr / e.outdeg) AS mass
-              FROM cpr p JOIN edges2b e ON p.title = e.src
-              WHERE p.t < 4 GROUP BY 1, 2) m
-            ON v.title = m.title) x
-          WHERE x.t IS NOT NULL),
-        res AS (
-          SELECT 'warm' AS kind, title,
-            CAST(floor(pr * 1e6 + 0.5) AS BIGINT) AS v FROM wpr WHERE t = 4
-          UNION ALL
-          SELECT 'warm_settle', 'ALL',
-            CAST(SUM(CAST(floor(abs(a.pr - b.pr) * 1e9 + 0.5) AS BIGINT))
-              AS BIGINT)
-          FROM wpr a JOIN wpr b ON a.title = b.title AND b.t = 3
-          WHERE a.t = 4
-          UNION ALL
-          SELECT 'cold_settle', 'ALL',
-            CAST(SUM(CAST(floor(abs(a.pr - b.pr) * 1e9 + 0.5) AS BIGINT))
-              AS BIGINT)
-          FROM cpr a JOIN cpr b ON a.title = b.title AND b.t = 3
-          WHERE a.t = 4)
-        SELECT kind, title, v FROM res ORDER BY kind, title"""
-      }),
-
-    // ---- TOPIC-SENSITIVE PageRank (Haveliwala, WWW'02): T personalized
-    // rank vectors — one per topic seed set — computed in ONE batched
-    // walk, plus the query-time linear blend that is the whole point of
-    // the construction (precompute per-topic vectors offline, mix them
-    // per query with topic weights at serving time — no walk at query
-    // time). Extends q95 (single seed set) exactly the way the
-    // reference's update rule generalizes (pageRank.scala:294,310 —
-    // VERDICT r18 #3): the uniform α/N teleport becomes α·s_t(v), here
-    // s_t(v) = 1/|S_t| iff topic(v) = t with topic(v) = hash32(title)%3
-    // (md5-derived, so the oracle partitions the identical sets). The
-    // walk is 4 fixed iterations on the per-iteration 1e-9 grid (the
-    // q29/q221 discipline), rank state keyed (topic, title), uniform-1.0
-    // init per topic (q95's convention). Output: the three 1e-6-grid
-    // vectors pivoted per title plus blend6 = (0.5·p0 + 0.3·p1) + 0.2·p2
-    // — the parenthesization is written identically in both engines so
-    // the single IEEE chain is bit-equal. Oracle: one recursive CTE over
-    // (iter, topic, title).
-    //
-    // Scale: the batched walk is the 100 TB design — each iteration is
-    // ONE edge-scan join (edges ⋈ rank on src) no matter how many topic
-    // vectors ride it; topics multiply only the aggregate state
-    // (T·|V| rank rows, or T-wide arrays per vertex on a real cluster),
-    // never the graph traffic. The per-topic seed shares are a 3-row
-    // driver pull (the I3 pattern).
-    ("q228_topic_sensitive_pagerank",
-      (s: SparkSession, dir: String) => {
-        val g0 = GraphBuilder.build(keyGraphDocs(s, dir)).localCheckpoint()
-        val edges = g0.select(col("title").as("src"),
-          explode(col("links")).as("dst"), size(col("links")).as("outdeg"))
-          .localCheckpoint()
-        val topicOf = graft.core.Portable.hash32(col("title")) % 3
-        // 3-row bounded pull: |S_t| per topic → α/|S_t| literals, the
-        // q95 ns-pull generalized (both engines divide 0.15 by the same
-        // integer once)
-        val shares: Map[Long, Double] = g0
-          .select(topicOf.as("vt"))
-          .groupBy(col("vt")).agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getLong(0) -> 0.15 / r.getLong(1)).toMap
-        // getOrElse(0.0): an empty hash%3 topic class contributes zero
-        // teleport mass (the DuckDB oracle degrades the same way), rather
-        // than throwing NoSuchElementException on the driver (ADVICE r19)
-        val shareCol =
-          when(col("topic") === 0L, lit(shares.getOrElse(0L, 0.0)))
-            .when(col("topic") === 1L, lit(shares.getOrElse(1L, 0.0)))
-            .otherwise(lit(shares.getOrElse(2L, 0.0)))
-        // the (topic × vertex) frame every iteration re-joins against —
-        // built once, checkpointed once
-        val vt3 = g0.select(col("title"), topicOf.as("vt"))
-          .crossJoin(s.range(3).select(col("id").as("topic")))
-          .localCheckpoint()
-        var pr = vt3.select(col("topic"), col("title"), lit(1.0).as("pr"))
-        var prev: DataFrame = null
-        for (_ <- 1 to 4) {
-          val mass = edges
-            .join(pr.withColumnRenamed("title", "src"), Seq("src"))
-            .groupBy(col("topic"), col("dst").as("title"))
-            .agg(sum(col("pr") / col("outdeg")).as("mass"))
-          val next = vt3
-            .join(mass, Seq("topic", "title"), "left_outer")
-            .select(col("topic"), col("title"),
-              (floor((when(col("vt") === col("topic"), shareCol)
-                .otherwise(lit(0.0))
-                + lit(0.85) * coalesce(col("mass"), lit(0.0)))
-                * 1e9 + 0.5) / 1e9).as("pr"))
-            .localCheckpoint()
-          if (prev != null) Scoped.free(prev)
-          prev = next
-          pr = next
-        }
-        val out = pr.groupBy(col("title"))
-          .agg(max(when(col("topic") === 0L, col("pr"))).as("p0"),
-            max(when(col("topic") === 1L, col("pr"))).as("p1"),
-            max(when(col("topic") === 2L, col("pr"))).as("p2"))
-          .select(col("title"),
-            floor(col("p0") * 1e6 + 0.5).cast("long").as("pr6_t0"),
-            floor(col("p1") * 1e6 + 0.5).cast("long").as("pr6_t1"),
-            floor(col("p2") * 1e6 + 0.5).cast("long").as("pr6_t2"),
-            floor(((lit(0.5) * col("p0") + lit(0.3) * col("p1"))
-              + lit(0.2) * col("p2")) * 1e6 + 0.5).cast("long").as("blend6"))
-          .orderBy(col("title"))
-        Scoped.releaseAfterUse(g0, edges, vt3, prev)
-        out
-      },
-      Some("""WITH RECURSIVE docs AS (
-          SELECT 'v' || CAST(l_orderkey % 997 AS VARCHAR) AS title,
-                 array_agg(DISTINCT 'v' || CAST(l_partkey % 1200 AS VARCHAR)) AS links
-          FROM lineitem GROUP BY 1),
-        titles AS (SELECT DISTINCT title FROM docs),
-        rawedges AS (SELECT title AS src, unnest(links) AS dst FROM docs),
-        realedges AS (SELECT DISTINCT src, dst FROM rawedges
-                      WHERE dst IN (SELECT title FROM titles)),
-        adj AS (SELECT src AS title, list_sort(array_agg(dst)) AS links
-                FROM realedges GROUP BY 1),
-        g AS (
-          SELECT t.title, COALESCE(a.links, ['NULL']) AS links
-          FROM titles t LEFT JOIN adj a ON t.title = a.title
-          UNION ALL
-          SELECT 'NULL' AS title,
-                 (SELECT list_sort(array_agg(title)) FROM titles) AS links),
-        tv AS (SELECT title,
-            ('0x' || substr(md5(title), 1, 8))::BIGINT % 3 AS vt FROM g),
-        shares AS (SELECT vt AS topic, 0.15 / COUNT(*) AS share
-          FROM tv GROUP BY vt),
-        vt3 AS (SELECT t.title, t.vt, s.topic, s.share
-          FROM tv t CROSS JOIN shares s),
-        edges2 AS (SELECT title AS src, unnest(links) AS dst,
-          len(links) AS outdeg FROM g),
-        pr AS (
-          SELECT 0 AS iter, topic, title, CAST(1.0 AS DOUBLE) AS pr FROM vt3
-          UNION ALL
-          SELECT * FROM (
-            SELECT CAST(COALESCE(m.iter, MAX(m.iter) OVER ()) AS INT) AS iter,
-              v.topic, v.title,
-              floor(((CASE WHEN v.vt = v.topic THEN v.share ELSE 0.0 END)
-                + 0.85 * COALESCE(m.mass, CAST(0.0 AS DOUBLE)))
-                * 1000000000.0 + 0.5) / 1000000000.0 AS pr
-            FROM vt3 v LEFT JOIN (
-              SELECT p.iter + 1 AS iter, p.topic, e.dst AS title,
-                SUM(p.pr / e.outdeg) AS mass
-              FROM pr p JOIN edges2 e ON p.title = e.src
-              WHERE p.iter < 4
-              GROUP BY 1, 2, 3) m
-            ON v.title = m.title AND v.topic = m.topic) x
-          WHERE x.iter IS NOT NULL)
-        SELECT title,
-          CAST(floor(MAX(CASE WHEN topic = 0 THEN pr END) * 1e6 + 0.5)
-            AS BIGINT) AS pr6_t0,
-          CAST(floor(MAX(CASE WHEN topic = 1 THEN pr END) * 1e6 + 0.5)
-            AS BIGINT) AS pr6_t1,
-          CAST(floor(MAX(CASE WHEN topic = 2 THEN pr END) * 1e6 + 0.5)
-            AS BIGINT) AS pr6_t2,
-          CAST(floor(((0.5 * MAX(CASE WHEN topic = 0 THEN pr END)
-            + 0.3 * MAX(CASE WHEN topic = 1 THEN pr END))
-            + 0.2 * MAX(CASE WHEN topic = 2 THEN pr END)) * 1e6 + 0.5)
-            AS BIGINT) AS blend6
-        FROM pr WHERE iter = 4 GROUP BY title ORDER BY title""")),
-
-    // ---- EIGENVECTOR centrality (Bonacich 1972): the pure power-method
-    // member of the centrality family — x ← A·x with L∞ normalization,
-    // no teleport, over the UNDIRECTED key graph — completing the set the
-    // catalog already gates (degree q73, PageRank q25/q29, HITS q180,
-    // harmonic q223): eigenvector is what hub-quality converges to when
-    // damping is removed, and the walk is exactly q217's power iteration
-    // applied to the adjacency operator instead of a covariance grid.
-    // Six iterations; each normalizes by the iterate's max (computed
-    // IN-PLAN via a broadcast 1-row aggregate, no driver pull) and lands
-    // on the 1e-9 grid (the q29 discipline). A zero iterate (empty edge
-    // set) short-circuits to 0.0 via the same CASE in both engines —
-    // this round's degenerate-input rule applied at birth.
-    //
-    // Scale: each iteration is ONE co-partitioned equi-join of the
-    // checkpointed edge list with the |V|-row iterate + one combinable
-    // max — the q25/q29 one-shuffle step; state never exceeds |V| rows.
-    ("q231_eigenvector_centrality",
-      (s: SparkSession, dir: String) => {
-        val raw = t(s, dir, "lineitem").select(
-          (col("l_orderkey") % 997).as("a"), (col("l_partkey") % 1200).as("b"))
-          .filter(col("a") =!= col("b"))
-        val und = raw.select(least(col("a"), col("b")).as("w1"),
-          greatest(col("a"), col("b")).as("w2")).distinct()
-        val edges = und.select(col("w1").as("src"), col("w2").as("dst"))
-          .unionByName(und.select(col("w2").as("src"), col("w1").as("dst")))
-          .localCheckpoint()
-        val out = eigenWalk(edges, 6)
-          .select(col("v"),
-            floor(col("x") * 1e6 + 0.5).cast("long").as("x6"))
-          .orderBy(col("v"))
-        Scoped.releaseAfterUse(edges)
-        out
-      },
-      Some("""WITH RECURSIVE raw AS (
-          SELECT l_orderkey % 997 AS a, l_partkey % 1200 AS b
-          FROM lineitem WHERE l_orderkey % 997 <> l_partkey % 1200),
-        und AS (SELECT DISTINCT least(a, b) AS w1, greatest(a, b) AS w2
-          FROM raw),
-        edges AS (
-          SELECT w1 AS src, w2 AS dst FROM und
-          UNION ALL
-          SELECT w2 AS src, w1 AS dst FROM und),
-        verts AS (SELECT DISTINCT src AS v FROM edges),
-        xr AS (
-          SELECT 0 AS iter, v, CAST(1.0 AS DOUBLE) AS x FROM verts
-          UNION ALL
-          SELECT * FROM (
-            SELECT CAST(COALESCE(m.iter, MAX(m.iter) OVER ()) AS INT) AS iter,
-              t.v,
-              CASE WHEN MAX(COALESCE(m.y, 0.0)) OVER () = 0.0 THEN 0.0
-                ELSE floor(COALESCE(m.y, 0.0)
-                  / MAX(COALESCE(m.y, 0.0)) OVER ()
-                  * 1000000000.0 + 0.5) / 1000000000.0 END AS x
-            FROM verts t LEFT JOIN (
-              SELECT p.iter + 1 AS iter, e.dst AS v, SUM(p.x) AS y
-              FROM xr p JOIN edges e ON p.v = e.src
-              WHERE p.iter < 6
-              GROUP BY 1, 2) m
-            ON t.v = m.v) q
-          WHERE q.iter IS NOT NULL)
-        SELECT v, CAST(floor(x * 1e6 + 0.5) AS BIGINT) AS x6
-        FROM xr WHERE iter = 6 ORDER BY v""")),
-
-    // ---- KATZ centrality (Katz 1953): x(v) = 1 + β·Σ_{u→v} x(u) over
-    // the DIRECTED key graph — the attenuated-walk member between
-    // q231's undamped eigenvector and q25's teleporting PageRank: every
-    // inbound path contributes, discounted β^length, and dangling/
-    // source vertices need no NULL wiring (the +1 base term keeps the
-    // series anchored). β = 1/1024 — an EXACT power of two, chosen
-    // under 1/λ_max of the near-complete key graph so the series
-    // converges; written as the identical 1.0/1024.0 division in both
-    // engines, with each of the 6 iterations quantized to the 1e-9
-    // grid (the q29 discipline). Six iterations bound walk length 6 —
-    // at β^6 = 2⁻⁶⁰ the truncated tail sits far below the grid.
-    //
-    // Scale: the q25/q29 one-shuffle step on the checkpointed distinct
-    // edge list; state is |V| rows; no normalization pass needed
-    // (attenuation bounds the iterate analytically).
-    ("q238_katz_centrality",
-      (s: SparkSession, dir: String) => {
-        val edges = t(s, dir, "lineitem").select(
-          (col("l_orderkey") % 997).as("src"),
-          (col("l_partkey") % 1200).as("dst"))
-          .filter(col("src") =!= col("dst")).distinct()
-          .localCheckpoint()
-        val out = katzWalk(edges, 6)
-          .select(col("v"),
-            floor(col("x") * 1e6 + 0.5).cast("long").as("katz6"))
-          .orderBy(col("v"))
-        Scoped.releaseAfterUse(edges)
-        out
-      },
-      Some("""WITH RECURSIVE edges AS (
-          SELECT DISTINCT l_orderkey % 997 AS src, l_partkey % 1200 AS dst
-          FROM lineitem WHERE l_orderkey % 997 <> l_partkey % 1200),
-        verts AS (SELECT DISTINCT v FROM (
-          SELECT src AS v FROM edges UNION ALL SELECT dst AS v FROM edges)),
-        xr AS (
-          SELECT 0 AS iter, v, CAST(1.0 AS DOUBLE) AS x FROM verts
-          UNION ALL
-          SELECT * FROM (
-            SELECT CAST(COALESCE(m.iter, MAX(m.iter) OVER ()) AS INT) AS iter,
-              t.v,
-              floor((1.0 + (1.0 / 1024.0)
-                * COALESCE(m.mass, CAST(0.0 AS DOUBLE)))
-                * 1000000000.0 + 0.5) / 1000000000.0 AS x
-            FROM verts t LEFT JOIN (
-              SELECT p.iter + 1 AS iter, e.dst AS v, SUM(p.x) AS mass
-              FROM xr p JOIN edges e ON p.v = e.src
-              WHERE p.iter < 6
-              GROUP BY 1, 2) m
-            ON t.v = m.v) q
-          WHERE q.iter IS NOT NULL)
-        SELECT v, CAST(floor(x * 1e6 + 0.5) AS BIGINT) AS katz6
-        FROM xr WHERE iter = 6 ORDER BY v""")),
-
     // ---- RICH-CLUB coefficient (Zhou & Mondragón 2004): for degree
     // thresholds k ∈ {1,2,4,8,16}, the edge density φ(k) among vertices
     // of degree > k — "do the hubs wire to each other?", the
@@ -1453,86 +818,6 @@ object CorpusSearch {
           CASE WHEN deg <= 1 THEN -1
             ELSE 2 * tri * 10000 // (deg * (deg - 1)) END AS c4
         FROM j ORDER BY v""")),
-
-    // ---- PERSONALIZED PageRank: teleport mass lands only on a seed set
-    // (titles with hash32 % 10 == 0 — ~10% of pages, md5-derived so the
-    // oracle selects the identical set) instead of uniformly — the
-    // query-dependent ranking variant (seed = "pages about X", rank =
-    // proximity to the seeds). Same loop/checkpoint/quantization
-    // discipline as q29 (fixed 5 iterations, per-iteration 1e-9 grid);
-    // the dangling NULL-vertex wiring stays uniform, as in the base
-    // graph semantics — only the teleport term is personalized. The seed
-    // share 0.15/|S| is computed ONCE driver-side and enters the plan as
-    // one double literal, so both engines do the identical division.
-    ("q95_personalized_pagerank",
-      (s: SparkSession, dir: String) => {
-        val g0 = GraphBuilder.build(keyGraphDocs(s, dir)).localCheckpoint()
-        val seed = graft.core.Portable.hash32(col("title")) % 10 === 0
-        val ns = g0.filter(seed).count()
-        val edges = g0.select(col("title").as("src"),
-          explode(col("links")).as("dst"), size(col("links")).as("outdeg"))
-          .localCheckpoint()
-        var pr = g0.select(col("title"), col("pr"))
-        var cp: DataFrame = null
-        for (i <- 1 to 5) {
-          val mass = edges.join(pr.withColumnRenamed("title", "src"), Seq("src"))
-            .groupBy(col("dst").as("title"))
-            .agg(sum(col("pr") / col("outdeg")).as("mass"))
-          var next = g0.select(col("title"))
-            .join(mass, Seq("title"), "left_outer")
-            .select(col("title"),
-              (floor((when(seed, lit(0.15 / ns)).otherwise(lit(0.0))
-                + lit(0.85) * coalesce(col("mass"), lit(0.0)))
-                * 1e9 + 0.5) / 1e9).as("pr"))
-          if (i % 3 == 0) {
-            val c = next.localCheckpoint()
-            if (cp != null) Scoped.free(cp)
-            cp = c
-            next = c
-          }
-          pr = next
-        }
-        Scoped.releaseAfterUse(g0, edges, cp)
-        pr.orderBy(col("title"))
-      },
-      Some("""WITH RECURSIVE docs AS (
-          SELECT 'v' || CAST(l_orderkey % 997 AS VARCHAR) AS title,
-                 array_agg(DISTINCT 'v' || CAST(l_partkey % 1200 AS VARCHAR)) AS links
-          FROM lineitem GROUP BY 1),
-        titles AS (SELECT DISTINCT title FROM docs),
-        rawedges AS (SELECT title AS src, unnest(links) AS dst FROM docs),
-        realedges AS (SELECT DISTINCT src, dst FROM rawedges
-                      WHERE dst IN (SELECT title FROM titles)),
-        adj AS (SELECT src AS title, list_sort(array_agg(dst)) AS links
-                FROM realedges GROUP BY 1),
-        g AS (
-          SELECT t.title, COALESCE(a.links, ['NULL']) AS links
-          FROM titles t LEFT JOIN adj a ON t.title = a.title
-          UNION ALL
-          SELECT 'NULL' AS title,
-                 (SELECT list_sort(array_agg(title)) FROM titles) AS links),
-        verts AS (SELECT title FROM g),
-        sn AS (SELECT 0.15 / COUNT(*) AS share FROM g
-               WHERE ('0x' || substr(md5(title), 1, 8))::BIGINT % 10 = 0),
-        edges2 AS (SELECT title AS src, unnest(links) AS dst, len(links) AS outdeg FROM g),
-        pr AS (
-          SELECT 0 AS iter, title, CAST(1.0 AS DOUBLE) AS pr FROM g
-          UNION ALL
-          SELECT * FROM (
-            SELECT CAST(COALESCE(m.iter, MAX(m.iter) OVER ()) AS INT) AS iter,
-              t.title,
-              floor(((CASE WHEN ('0x' || substr(md5(t.title), 1, 8))::BIGINT % 10 = 0
-                    THEN (SELECT share FROM sn) ELSE 0.0 END)
-                + 0.85 * COALESCE(m.mass, CAST(0.0 AS DOUBLE))) * 1000000000.0 + 0.5)
-                / 1000000000.0 AS pr
-            FROM verts t LEFT JOIN (
-              SELECT p.iter + 1 AS iter, e.dst AS title, SUM(p.pr / e.outdeg) AS mass
-              FROM pr p JOIN edges2 e ON p.title = e.src
-              WHERE p.iter < 5
-              GROUP BY 1, 2) m
-            ON t.title = m.title) x
-          WHERE x.iter IS NOT NULL)
-        SELECT title, pr FROM pr WHERE iter = 5 ORDER BY title""")),
 
     // ---- two-hop neighborhood expansion from a PROBE SET: |N1| and
     // |N≤2 \ {self}| per probe page — the friends-of-friends / related-
@@ -1907,206 +1192,12 @@ object CorpusSearch {
         ORDER BY pmi6 DESC, a, b LIMIT 20"""))
   ,
 
-    // ---- BFS k-hop reachability with DISTANCE labels (the frontier-
-    // expansion iteration PageRank's fixpoint and CC's label-propagation
-    // don't surface directly): min-hop level from seed v0 over the
-    // dead-link-dropped key graph, depth-capped at 3 (the unbounded
-    // variant iterates to an empty frontier with the same per-round
-    // checkpoint discipline as the PageRank loop). Each round is ONE
-    // frontier-keyed equi join + an anti-join against the visited set —
-    // never a path enumeration; the oracle DOES enumerate paths (depth-
-    // bounded) and takes MIN(level), pinning the min-hop semantics from
-    // a different formulation.
-    //
-    // Scale: frontier and visited are vertex-bounded; each round's join
-    // is edges ⋈ frontier (equi on src); localCheckpoint truncates the
-    // growing lineage each round exactly like PageRank.run; on this
-    // near-complete fixture graph BFS saturates by level 2 — the depth
-    // cap, not the graph, bounds the loop.
-    ("q168_bfs_levels",
-      (s: SparkSession, dir: String) => {
-        val docs = keyGraphDocs(s, dir)
-        val titles = docs.select(col("title")).distinct()
-        val edges = docs
-          .select(col("title").as("src"), explode(col("links")).as("dst"))
-          .join(titles.select(col("title").as("dst")), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst")).distinct().localCheckpoint()
-        var visited = titles.filter(col("title") === "v0")
-          .select(col("title"), lit(0L).as("level")).localCheckpoint()
-        var frontier = visited
-        // eager localCheckpoints: by the time each round's `next` and the
-        // new `visited` exist, the PREVIOUS round's frames are fully
-        // consumed and freeable — the PageRank loop's release cadence
-        for (i <- 1 to 3) {
-          val next = edges
-            .join(frontier.select(col("title").as("src")), Seq("src"))
-            .select(col("dst").as("title")).distinct()
-            .join(visited, Seq("title"), "left_anti")
-            .select(col("title"), lit(i.toLong).as("level"))
-            .localCheckpoint()
-          val prevVisited = visited
-          visited = prevVisited.unionByName(next).localCheckpoint()
-          if (frontier ne prevVisited) graft.core.Scoped.free(frontier)
-          graft.core.Scoped.free(prevVisited)
-          frontier = next
-        }
-        graft.core.Scoped.free(frontier)
-        graft.core.Scoped.free(edges)
-        graft.core.Scoped.releaseAfterUse(visited)
-        visited.orderBy(col("level"), col("title"))
-      },
-      Some("""WITH RECURSIVE docs AS (
-          SELECT 'v' || CAST(l_orderkey % 997 AS VARCHAR) AS title,
-                 array_agg(DISTINCT 'v' || CAST(l_partkey % 1200 AS VARCHAR))
-                   AS links
-          FROM lineitem GROUP BY 1),
-        titles AS (SELECT DISTINCT title FROM docs),
-        rawedges AS (SELECT title AS src, unnest(links) AS dst FROM docs),
-        edges AS (SELECT DISTINCT src, dst FROM rawedges
-                  WHERE dst IN (SELECT title FROM titles)),
-        walk AS (
-          SELECT 'v0' AS title, 0 AS level
-          UNION ALL
-          SELECT e.dst AS title, w.level + 1 AS level
-          FROM walk w JOIN edges e ON w.title = e.src
-          WHERE w.level < 3)
-        SELECT title, CAST(MIN(level) AS BIGINT) AS level
-        FROM walk GROUP BY title ORDER BY level, title""")),
-
-    // ---- HITS hubs & authorities (Kleinberg) on the key graph — the
-    // mutual-reinforcement sibling of PageRank: auth(v) = Σ hub(u) over
-    // in-edges, hub(v) = Σ auth(w) over out-edges, L1-normalized, both
-    // updated SYNCHRONOUSLY from the previous iteration (one state read
-    // per step — the same property lets the oracle's recursive CTE
-    // reference its state table exactly once, via a doubled-edge table
-    // carrying each edge in both directions). No dead-link/NULL wiring:
-    // unlike PageRank's stochastic matrix, HITS runs on the raw digraph,
-    // so part-nodes that are never orderkeys stay as pure authorities.
-    //
-    // Cross-engine exactness is by CONSTRUCTION, not quantization-of-
-    // doubles: scores live on a 1e-9 integer grid (BIGINT h9/a9), the
-    // contribution sums are exact integer adds (order-independent, unlike
-    // the 1e-9-rounded DOUBLE sums q29/q95 use — their per-vertex fan-in
-    // is small; HITS's global L1 total over every vertex is not), and the
-    // normalization is multiply-through integer division widened to
-    // decimal(38,0)/HUGEINT so no int64 product can wrap (the q150
-    // lesson). Identical bits at every iteration in both engines.
-    //
-    // Scale: the SAME doubled-edge table drives both engines — each edge
-    // carried once per direction, static across iterations — so one
-    // iteration is ONE join + ONE partial-agg shuffle of the
-    // contributions + a 2-long driver pull for the L1 totals (the I3
-    // counter→conf pattern): the PageRank one-shuffle-per-iteration
-    // shape, with both score directions riding the same pass. At bench
-    // scale the |V|-row state broadcasts, so the join is map-side; on a
-    // cluster where |V| outgrows broadcast, bucket-or-pre-partition
-    // dedges by contact once so only the state shuffles per iteration.
-    // Hot joins run on INTEGER vertex ids (the q96 lesson), 'v'-titles
-    // rebuilt only at output; contributions are checkpointed per
-    // iteration because they feed two consumers (totals + normalize) —
-    // left lazy the plan doubles per step.
-    ("q180_hits",
-      (s: SparkSession, dir: String) => {
-        val edges = t(s, dir, "lineitem").select(
-          (col("l_orderkey") % 997).as("src"),
-          (col("l_partkey") % 1200).as("dst")).distinct()
-        val dedges = edges
-          .select(col("src").as("contact"), col("dst").as("target"),
-            lit(true).as("from_hub"))
-          .unionByName(edges.select(col("dst").as("contact"),
-            col("src").as("target"), lit(false).as("from_hub")))
-          .localCheckpoint()
-        // every vertex is some dedges row's target (each edge targets
-        // both its ends), so the vertex set needs no separate carry
-        var state = dedges.select(col("target").as("v")).distinct()
-          .select(col("v"), lit(1000000000L).as("h9"),
-            lit(1000000000L).as("a9"))
-        var prev: DataFrame = null
-        for (i <- 1 to 5) {
-          // the contributions feed TWO consumers — the L1 totals and the
-          // normalize — so materialize them once per iteration (|V| rows):
-          // left lazy, each iteration's totals branch re-derives the whole
-          // prior chain and the plan doubles per step (measured: 5
-          // checkpoint-every-3 iterations cost the same 23 s as 10)
-          // broadcast the |V|-row state EXPLICITLY: its checkpoint-backed
-          // plan carries join-derived (inflated) size stats, so left to
-          // itself Spark broadcasts the 2|E|-row dedges side instead — a
-          // single-task ~5 s hashed-relation build per iteration
-          // (stage-profiled). On a cluster where |V| outgrows broadcast,
-          // drop the hint and pre-bucket dedges by contact.
-          val contrib = dedges
-            .join(broadcast(state.withColumnRenamed("v", "contact")),
-              Seq("contact"))
-            .groupBy(col("target").as("v"))
-            .agg(sum(when(col("from_hub"), col("h9"))).as("a_sum"),
-              sum(when(!col("from_hub"), col("a9"))).as("h_sum"))
-            .select(col("v"), coalesce(col("a_sum"), lit(0L)).as("a_raw"),
-              coalesce(col("h_sum"), lit(0L)).as("h_raw"))
-            .localCheckpoint()
-          // the L1 totals are TWO LONGS off the just-checkpointed
-          // contributions — pull them driver-side and inline as literals
-          // (the I3 counter→conf pattern PageRank's convergence loop
-          // uses). The lazy alternative (crossJoin over a broadcast 1-row
-          // aggregate) re-enters the next iteration's broadcast build as
-          // a nested-exchange plan that measured 6-8 s PER ITERATION vs
-          // <1 s for the whole contribution pass.
-          val tot = contrib.agg(sum(col("a_raw")), sum(col("h_raw"))).head()
-          val (at, ht) = (tot.getLong(0), tot.getLong(1))
-          // exact floor division: Spark's decimal `div` ROUNDS its
-          // intermediate quotient at scale 6 (HALF_UP) before truncating,
-          // so a quotient within 5e-7 below an integer comes back +1 vs
-          // DuckDB's exact `//`. Subtracting the exact decimal remainder
-          // first makes the division exactly representable, so the
-          // rounding is moot.
-          state = contrib
-            .withColumn("hn", expr("cast(h_raw as decimal(38,0)) * 1000000000"))
-            .withColumn("an", expr("cast(a_raw as decimal(38,0)) * 1000000000"))
-            .select(col("v"),
-              expr(s"cast((hn - hn % ${ht}L) div ${ht}L as bigint)").as("h9"),
-              expr(s"cast((an - an % ${at}L) div ${at}L as bigint)").as("a9"))
-          if (prev != null) Scoped.free(prev)
-          prev = contrib
-        }
-        Scoped.releaseAfterUse(dedges, prev)
-        state.select(concat(lit("v"), col("v")).as("title"),
-          col("h9").as("hub9"), col("a9").as("auth9"))
-          .orderBy(col("title"))
-      },
-      Some("""WITH RECURSIVE edges AS (
-          SELECT DISTINCT l_orderkey % 997 AS src, l_partkey % 1200 AS dst
-          FROM lineitem),
-        verts AS (SELECT DISTINCT v FROM
-          (SELECT src AS v FROM edges UNION ALL SELECT dst FROM edges)),
-        dedges AS (
-          SELECT src AS contact, dst AS target, TRUE AS from_hub FROM edges
-          UNION ALL
-          SELECT dst AS contact, src AS target, FALSE AS from_hub FROM edges),
-        state AS (
-          SELECT 0 AS iter, v, CAST(1000000000 AS BIGINT) AS h9,
-                 CAST(1000000000 AS BIGINT) AS a9
-          FROM verts
-          UNION ALL
-          SELECT iter, v,
-            CAST(CAST(h_raw AS HUGEINT) * 1000000000
-                 // (SUM(h_raw) OVER ()) AS BIGINT) AS h9,
-            CAST(CAST(a_raw AS HUGEINT) * 1000000000
-                 // (SUM(a_raw) OVER ()) AS BIGINT) AS a9
-          FROM (
-            SELECT p.iter + 1 AS iter, e.target AS v,
-              COALESCE(SUM(CASE WHEN e.from_hub THEN p.h9 END), 0) AS a_raw,
-              COALESCE(SUM(CASE WHEN NOT e.from_hub THEN p.a9 END), 0) AS h_raw
-            FROM state p JOIN dedges e ON p.v = e.contact
-            WHERE p.iter < 5
-            GROUP BY 1, 2) s)
-        SELECT 'v' || CAST(v AS VARCHAR) AS title, h9 AS hub9, a9 AS auth9
-        FROM state WHERE iter = 5 ORDER BY title""")),
-
     // ---- LABEL PROPAGATION community detection (Raghavan/Albert/Kumara
     // 2007) on the undirected key graph: label_0(v) = v; each iteration
     // every vertex adopts the most frequent label among its neighbors,
     // ties to the SMALLEST label; 5 synchronous iterations (synchronous
     // LPA can oscillate, so the fixed-depth output is the deterministic
-    // contract — same policy as q180/q95). Near-linear community
+    // contract — same policy as q29's fixed 10). Near-linear community
     // detection — the coarse-graining complement to exact components
     // (q49): CC merges anything connected, LPA splits a connected graph
     // into densely-linked regions.
@@ -2117,11 +1208,12 @@ object CorpusSearch {
     // exact 64-bit integer ops in both engines (labels are vertex ids
     // < 2²⁰ here; a cluster run widens the packing or uses a struct
     // max). Oracle: recursive CTE over the same doubled-edge table, one
-    // state reference per step (the q180 shape).
+    // state reference per step.
     //
-    // Scale: per iteration ONE join (broadcast |V|-row state; see q180's
-    // stats note) + a (target,label)-keyed combinable count + a
-    // target-keyed MAX — all partial-aggregated; state is |V| rows.
+    // Scale: per iteration ONE join (the |V|-row state broadcasts at
+    // bench scale, so the join is map-side) + a (target,label)-keyed
+    // combinable count + a target-keyed MAX — all partial-aggregated;
+    // state is |V| rows.
     ("q184_lpa_communities",
       (s: SparkSession, dir: String) => {
         val edges = t(s, dir, "lineitem").select(
@@ -2380,7 +1472,7 @@ object CorpusSearch {
     // standard density filter before community detection / influence
     // analysis, and the graph family's "how much of this crawl graph is
     // structurally dense" scorecard beside q73's static degree histogram.
-    // Edges are the q180/q184 key graph, CANONICALIZED to undirected
+    // Edges are the q184 key graph, CANONICALIZED to undirected
     // simple edges (least/greatest + distinct, self-loops dropped) so
     // degree counts are the textbook ones.
     //
@@ -2556,275 +1648,6 @@ object CorpusSearch {
         FROM pr WHERE iter = $it ORDER BY rank"""
       }),
 
-    // ---- ANF / HyperBall NEIGHBORHOOD FUNCTION (Palmer et al. ANF,
-    // Boldi–Vigna HyperBall): |B(v, t)| — how many vertices lie within
-    // t hops of v — estimated for the WHOLE graph at once by giving
-    // every vertex a 64-register LogLog sketch (q210's register
-    // algebra) and max-MERGING sketches along edges each hop:
-    // R_{t+1}(v) = max(R_t(v), R_t(w)) over out-edges v→w. This is THE
-    // way distance distributions / effective diameter are computed on
-    // graphs too big for all-pairs BFS: per hop, one edge join + one
-    // combinable (v, register) MAX aggregate — state is |V|·64 cells,
-    // never |V|² pairs. Registers are md5-derived (q210's exact
-    // binary-string rank), the per-vertex harmonic sum is an exact
-    // integer, the one double op per vertex is C/S with a shared
-    // literal, and the per-hop total is an exact BIGINT sum of gridded
-    // estimates — bit-identical cross-engine. Estimates ride the
-    // corrected HLL estimator: linear counting m·ln(m/V) in the small
-    // range (a 1-element raw estimate is ~45× high, and |B(v,0)| = 1
-    // always sits there; ln parity is the pinned q187/q191
-    // discipline).
-    //
-    // Scale: per hop the sketch path shuffles |E|·(occupied registers)
-    // rows into a combinable max — linear in edges, constant in
-    // distance. The gate pins sketch PARITY (est_pairs + occupied
-    // registers per hop, bit-identical register algebra both
-    // engines); estimator ACCURACY against exact reachability is
-    // pinned by AnfSpec at sf0.001 — the exact path is the |V|²
-    // frontier the sketch replaces, so it must never ride the query
-    // itself (the first cut did, and was 15× the sketch's cost at
-    // sf0.1). The oracle unrolls the 3 hops as MATERIALIZED CTEs
-    // (the q189 lesson: chained CTEs referenced twice must pin).
-    ("q212_anf_hyperball",
-      (s: SparkSession, dir: String) => {
-        import s.implicits._
-        // the walk, byte-vector state, per-hop row tables + fixed-point
-        // padding all live in [[hyperballHopRows]] (shared with q223)
-        val hops = hyperballHopRows(s, dir)
-        // per-hop totals are 1-long driver pulls (the I3 pattern),
-        // memoized over distinct state handles by hyperballHopSums;
-        // occupancy comes free with the walk's own digest
-        val sums = hyperballHopSums(hops)
-        val rows = hops.zipWithIndex.map { case ((_, dig), tHop) =>
-          (tHop.toLong, sums(tHop), dig._1)
-        }
-        hops.map(_._1).distinct.foreach(Scoped.free(_))
-        rows.toDF("t", "est_pairs", "occ_regs").orderBy(col("t"))
-      },
-      Some(s"""WITH $hyperballCtes,
-        est0 AS (SELECT 0 AS t, CAST(SUM(e) AS BIGINT) AS est_pairs FROM (
-          SELECT CAST(floor(CASE WHEN vz > 0 AND raw <= 160.0
-              THEN 64.0 * ln(64.0 / CAST(vz AS DOUBLE)) ELSE raw END
-              + 0.5) AS BIGINT) AS e
-          FROM (SELECT 389776872046.59198 / CAST(
-              SUM(1::BIGINT << CAST(27 - r AS INTEGER))
-              + (64 - COUNT(*)) * (1::BIGINT << 27) AS DOUBLE) AS raw,
-              64 - COUNT(*) AS vz
-            FROM s0 GROUP BY v))),
-        est1 AS (SELECT 1 AS t, CAST(SUM(e) AS BIGINT) AS est_pairs FROM (
-          SELECT CAST(floor(CASE WHEN vz > 0 AND raw <= 160.0
-              THEN 64.0 * ln(64.0 / CAST(vz AS DOUBLE)) ELSE raw END
-              + 0.5) AS BIGINT) AS e
-          FROM (SELECT 389776872046.59198 / CAST(
-              SUM(1::BIGINT << CAST(27 - r AS INTEGER))
-              + (64 - COUNT(*)) * (1::BIGINT << 27) AS DOUBLE) AS raw,
-              64 - COUNT(*) AS vz
-            FROM s1 GROUP BY v))),
-        est2 AS (SELECT 2 AS t, CAST(SUM(e) AS BIGINT) AS est_pairs FROM (
-          SELECT CAST(floor(CASE WHEN vz > 0 AND raw <= 160.0
-              THEN 64.0 * ln(64.0 / CAST(vz AS DOUBLE)) ELSE raw END
-              + 0.5) AS BIGINT) AS e
-          FROM (SELECT 389776872046.59198 / CAST(
-              SUM(1::BIGINT << CAST(27 - r AS INTEGER))
-              + (64 - COUNT(*)) * (1::BIGINT << 27) AS DOUBLE) AS raw,
-              64 - COUNT(*) AS vz
-            FROM s2 GROUP BY v))),
-        est3 AS (SELECT 3 AS t, CAST(SUM(e) AS BIGINT) AS est_pairs FROM (
-          SELECT CAST(floor(CASE WHEN vz > 0 AND raw <= 160.0
-              THEN 64.0 * ln(64.0 / CAST(vz AS DOUBLE)) ELSE raw END
-              + 0.5) AS BIGINT) AS e
-          FROM (SELECT 389776872046.59198 / CAST(
-              SUM(1::BIGINT << CAST(27 - r AS INTEGER))
-              + (64 - COUNT(*)) * (1::BIGINT << 27) AS DOUBLE) AS raw,
-              64 - COUNT(*) AS vz
-            FROM s3 GROUP BY v))),
-        occ0 AS (SELECT 0 AS t, COUNT(*) AS occ_regs FROM s0),
-        occ1 AS (SELECT 1 AS t, COUNT(*) AS occ_regs FROM s1),
-        occ2 AS (SELECT 2 AS t, COUNT(*) AS occ_regs FROM s2),
-        occ3 AS (SELECT 3 AS t, COUNT(*) AS occ_regs FROM s3),
-        est AS (SELECT * FROM est0 UNION ALL SELECT * FROM est1
-          UNION ALL SELECT * FROM est2 UNION ALL SELECT * FROM est3),
-        occ AS (SELECT * FROM occ0 UNION ALL SELECT * FROM occ1
-          UNION ALL SELECT * FROM occ2 UNION ALL SELECT * FROM occ3)
-        SELECT CAST(est.t AS BIGINT) AS t, est.est_pairs,
-          CAST(occ.occ_regs AS BIGINT) AS occ_regs
-        FROM est JOIN occ ON occ.t = est.t ORDER BY t"""))
-  ,
-
-    // ---- HARMONIC CENTRALITY from the same HyperBall walk (Boldi &
-    // Vigna, "Axioms for centrality" / the HyperBall paper's headline
-    // application): H(v) = Σ_{t≥1} |B(v,t) − B(v,t−1)| / t — how close
-    // a vertex is to EVERYTHING, computed for the whole graph at once
-    // from the per-vertex register states q212 already maintains. The
-    // hop weights 1/t for t ∈ {1,2,3} ride an EXACT integer encoding:
-    // hc6 = 6·d₁ + 3·d₂ + 2·d₃ (6/t is integral for every t ≤ 3), so
-    // the output is pure BIGINT arithmetic over the gridded per-vertex
-    // estimates — no division anywhere. Top-20 by hc6 is a distributed
-    // TakeOrdered. Ball-size deltas can dip slightly negative where the
-    // estimator crosses its linear-counting branch point; the signed
-    // arithmetic keeps that visible rather than clamping it.
-    //
-    // Scale: the walk is q212's (|E|-linear per hop, |V|·64 bytes of
-    // state); the estimates are four combinable |V|·64-row aggregates;
-    // the fold + top-k never touches anything corpus-sized.
-    ("q223_harmonic_centrality",
-      (s: SparkSession, dir: String) => {
-        val hops = hyperballHopRows(s, dir).map(_._1)
-        val e = hyperballEstCol(hops(0), "e0")
-          .join(hyperballEstCol(hops(1), "e1"), Seq("v"))
-          .join(hyperballEstCol(hops(2), "e2"), Seq("v"))
-          .join(hyperballEstCol(hops(3), "e3"), Seq("v"))
-        val out = e.select(col("v"), col("e0"), col("e1"), col("e2"), col("e3"),
-            (lit(6L) * (col("e1") - col("e0"))
-              + lit(3L) * (col("e2") - col("e1"))
-              + lit(2L) * (col("e3") - col("e2"))).as("hc6"))
-          .orderBy(desc("hc6"), asc("v")).limit(20)
-        hops.distinct.foreach(Scoped.releaseAfterUse(_))
-        out
-      },
-      Some(s"""WITH $hyperballCtes,
-        ev0 AS (SELECT v, CAST(floor(CASE WHEN vz > 0 AND raw <= 160.0
-              THEN 64.0 * ln(64.0 / CAST(vz AS DOUBLE)) ELSE raw END
-              + 0.5) AS BIGINT) AS e
-          FROM (SELECT v, 389776872046.59198 / CAST(
-              SUM(1::BIGINT << CAST(27 - r AS INTEGER))
-              + (64 - COUNT(*)) * (1::BIGINT << 27) AS DOUBLE) AS raw,
-              64 - COUNT(*) AS vz
-            FROM s0 GROUP BY v)),
-        ev1 AS (SELECT v, CAST(floor(CASE WHEN vz > 0 AND raw <= 160.0
-              THEN 64.0 * ln(64.0 / CAST(vz AS DOUBLE)) ELSE raw END
-              + 0.5) AS BIGINT) AS e
-          FROM (SELECT v, 389776872046.59198 / CAST(
-              SUM(1::BIGINT << CAST(27 - r AS INTEGER))
-              + (64 - COUNT(*)) * (1::BIGINT << 27) AS DOUBLE) AS raw,
-              64 - COUNT(*) AS vz
-            FROM s1 GROUP BY v)),
-        ev2 AS (SELECT v, CAST(floor(CASE WHEN vz > 0 AND raw <= 160.0
-              THEN 64.0 * ln(64.0 / CAST(vz AS DOUBLE)) ELSE raw END
-              + 0.5) AS BIGINT) AS e
-          FROM (SELECT v, 389776872046.59198 / CAST(
-              SUM(1::BIGINT << CAST(27 - r AS INTEGER))
-              + (64 - COUNT(*)) * (1::BIGINT << 27) AS DOUBLE) AS raw,
-              64 - COUNT(*) AS vz
-            FROM s2 GROUP BY v)),
-        ev3 AS (SELECT v, CAST(floor(CASE WHEN vz > 0 AND raw <= 160.0
-              THEN 64.0 * ln(64.0 / CAST(vz AS DOUBLE)) ELSE raw END
-              + 0.5) AS BIGINT) AS e
-          FROM (SELECT v, 389776872046.59198 / CAST(
-              SUM(1::BIGINT << CAST(27 - r AS INTEGER))
-              + (64 - COUNT(*)) * (1::BIGINT << 27) AS DOUBLE) AS raw,
-              64 - COUNT(*) AS vz
-            FROM s3 GROUP BY v))
-        SELECT e0.v, e0.e AS e0, e1.e AS e1, e2.e AS e2, e3.e AS e3,
-          6 * (e1.e - e0.e) + 3 * (e2.e - e1.e) + 2 * (e3.e - e2.e) AS hc6
-        FROM ev0 e0
-        JOIN ev1 e1 ON e1.v = e0.v
-        JOIN ev2 e2 ON e2.v = e0.v
-        JOIN ev3 e3 ON e3.v = e0.v
-        ORDER BY hc6 DESC, e0.v LIMIT 20"""))
-  ,
-
-    // ---- EFFECTIVE DIAMETER from the same walk (the ANF paper's other
-    // headline statistic): the smallest hop count t at which the
-    // estimated reachable-pair total N(t) covers 90%% of N(t_max),
-    // linearly interpolated between the bracketing hops — the one
-    // number that says "how far apart is this graph, really" without
-    // any all-pairs BFS. Everything derives from the four gridded
-    // BIGINT hop totals q212 gates (bit-identical both engines); the
-    // interpolation is three IEEE ops from those exact integers onto
-    // the ‱ grid, mirrored operation-for-operation in the oracle.
-    // t=0 covering the target (a degenerate graph) short-circuits to 0
-    // via the same CASE in both engines.
-    //
-    // Scale: q212's walk + four combinable estimates; the diameter
-    // fold runs on FOUR rows.
-    ("q225_effective_diameter",
-      (s: SparkSession, dir: String) => {
-        import s.implicits._
-        val hops = hyperballHopRows(s, dir)
-        val sums = hyperballHopSums(hops)
-        val ests = hops.indices.map(tHop => (tHop.toLong, sums(tHop)))
-        hops.map(_._1).distinct.foreach(Scoped.free(_))
-        val e = ests.toDF("t", "n") // four exact-integer rows
-        val wide = e.groupBy().pivot("t", Seq(0, 1, 2, 3)).agg(first(col("n")))
-          .toDF("n0", "n1", "n2", "n3")
-        wide.select(col("n0"), col("n1"), col("n2"), col("n3"),
-            (col("n3").cast("double") * lit(0.9)).as("tgt"))
-          .select(col("n0"), col("n1"), col("n2"), col("n3"),
-            when(col("n0").cast("double") >= col("tgt"), lit(0L))
-              .when(col("n1").cast("double") >= col("tgt"), lit(1L))
-              .when(col("n2").cast("double") >= col("tgt"), lit(2L))
-              .otherwise(lit(3L)).as("t_hit"), col("tgt"))
-          .select(col("n0"), col("n1"), col("n2"), col("n3"), col("t_hit"),
-            when(col("t_hit") === 0L, lit(0L)).otherwise(
-              floor((col("t_hit").cast("double") - lit(1.0)
-                + (col("tgt") - element_at(
-                    array(col("n0"), col("n1"), col("n2"), col("n3")),
-                    col("t_hit").cast("int")).cast("double"))
-                  / (element_at(
-                      array(col("n0"), col("n1"), col("n2"), col("n3")),
-                      col("t_hit").cast("int") + 1).cast("double")
-                    - element_at(
-                        array(col("n0"), col("n1"), col("n2"), col("n3")),
-                        col("t_hit").cast("int")).cast("double")))
-                * lit(1e4) + lit(0.5)).cast("long")).as("effdiam4"))
-      },
-      Some(s"""WITH $hyperballCtes,
-        est0 AS (SELECT CAST(SUM(e) AS BIGINT) AS n FROM (
-          SELECT CAST(floor(CASE WHEN vz > 0 AND raw <= 160.0
-              THEN 64.0 * ln(64.0 / CAST(vz AS DOUBLE)) ELSE raw END
-              + 0.5) AS BIGINT) AS e
-          FROM (SELECT 389776872046.59198 / CAST(
-              SUM(1::BIGINT << CAST(27 - r AS INTEGER))
-              + (64 - COUNT(*)) * (1::BIGINT << 27) AS DOUBLE) AS raw,
-              64 - COUNT(*) AS vz
-            FROM s0 GROUP BY v))),
-        est1 AS (SELECT CAST(SUM(e) AS BIGINT) AS n FROM (
-          SELECT CAST(floor(CASE WHEN vz > 0 AND raw <= 160.0
-              THEN 64.0 * ln(64.0 / CAST(vz AS DOUBLE)) ELSE raw END
-              + 0.5) AS BIGINT) AS e
-          FROM (SELECT 389776872046.59198 / CAST(
-              SUM(1::BIGINT << CAST(27 - r AS INTEGER))
-              + (64 - COUNT(*)) * (1::BIGINT << 27) AS DOUBLE) AS raw,
-              64 - COUNT(*) AS vz
-            FROM s1 GROUP BY v))),
-        est2 AS (SELECT CAST(SUM(e) AS BIGINT) AS n FROM (
-          SELECT CAST(floor(CASE WHEN vz > 0 AND raw <= 160.0
-              THEN 64.0 * ln(64.0 / CAST(vz AS DOUBLE)) ELSE raw END
-              + 0.5) AS BIGINT) AS e
-          FROM (SELECT 389776872046.59198 / CAST(
-              SUM(1::BIGINT << CAST(27 - r AS INTEGER))
-              + (64 - COUNT(*)) * (1::BIGINT << 27) AS DOUBLE) AS raw,
-              64 - COUNT(*) AS vz
-            FROM s2 GROUP BY v))),
-        est3 AS (SELECT CAST(SUM(e) AS BIGINT) AS n FROM (
-          SELECT CAST(floor(CASE WHEN vz > 0 AND raw <= 160.0
-              THEN 64.0 * ln(64.0 / CAST(vz AS DOUBLE)) ELSE raw END
-              + 0.5) AS BIGINT) AS e
-          FROM (SELECT 389776872046.59198 / CAST(
-              SUM(1::BIGINT << CAST(27 - r AS INTEGER))
-              + (64 - COUNT(*)) * (1::BIGINT << 27) AS DOUBLE) AS raw,
-              64 - COUNT(*) AS vz
-            FROM s3 GROUP BY v))),
-        wide AS (SELECT est0.n AS n0, est1.n AS n1, est2.n AS n2,
-            est3.n AS n3, CAST(est3.n AS DOUBLE) * 0.9 AS tgt
-          FROM est0, est1, est2, est3),
-        hit AS (SELECT n0, n1, n2, n3, tgt,
-            CASE WHEN CAST(n0 AS DOUBLE) >= tgt THEN 0
-                 WHEN CAST(n1 AS DOUBLE) >= tgt THEN 1
-                 WHEN CAST(n2 AS DOUBLE) >= tgt THEN 2
-                 ELSE 3 END AS t_hit
-          FROM wide)
-        SELECT n0, n1, n2, n3, CAST(t_hit AS BIGINT) AS t_hit,
-          CASE WHEN t_hit = 0 THEN 0
-               ELSE CAST(floor((CAST(t_hit AS DOUBLE) - 1.0
-                 + (tgt - CAST([n0, n1, n2, n3][t_hit] AS DOUBLE))
-                   / (CAST([n0, n1, n2, n3][t_hit + 1] AS DOUBLE)
-                     - CAST([n0, n1, n2, n3][t_hit] AS DOUBLE)))
-                 * 1e4 + 0.5) AS BIGINT) END AS effdiam4
-        FROM hit"""))
-  ,
-
     // ---- CLI surface #2, end-to-end (VERDICT r17 #5 — the q208
     // pattern applied to the reference's OTHER two mains): the full
     // reference workflow `RankPages` → `BuildIndex`
@@ -2932,187 +1755,7 @@ object CorpusSearch {
         JOIN pr6 p ON p.title = h.title
         CROSS JOIN nd
         ORDER BY h.term_idx, h.title"""
-      }),
-
-    // ---- Source-sampled k-bounded betweenness centrality (Brandes 2001,
-    // "A faster algorithm for betweenness centrality"; the horizon-capped
-    // variant is Brandes 2008's k-betweenness) — the one classic
-    // centrality the family still lacked (degree q73, PageRank
-    // q25/q29/q95/q221/q228, HITS q180, harmonic q223, eigenvector q231,
-    // Katz q238). Two phases over a 1/16-sparsified directed key graph
-    // (the dense fixture saturates BFS by level 2 — q168's note — which
-    // would make every shortest path trivial): (1) forward multi-source
-    // BFS from the 8 smallest out-vertices, carrying per-(source,vertex)
-    // shortest-path COUNTS σ (q168's frontier expansion + a σ-sum instead
-    // of a min-level), horizon 4; (2) Brandes' dependency back-propagation
-    // δ(v) = Σ_{w∈succ_DAG(v)} σ(v)·(1+δ(w))/σ(w), run deepest-level-first
-    // as 3 level-keyed joins over the shortest-path DAG.
-    //
-    // Cross-engine exactness is by CONSTRUCTION (the q180 discipline):
-    // δ lives on a 1e-6 integer grid — each term is the BIGINT floor
-    // division σ_v·(10⁶+δ'(w)) div σ_w and every accumulation is an exact
-    // order-independent integer SUM, so both engines produce identical
-    // bits with no float anywhere. Overflow is structurally impossible:
-    // the key graph caps at 997·1200/16 ≈ 75k edges (so σ ≤ 75⁴ ≈ 3.2e7,
-    // δ' ≤ 75·(10⁶+75·10⁶·75) < 6e9, max product < 2e17 ≪ 2⁶³) — the cap
-    // is the fixture's modulus, not the scale factor.
-    //
-    // Scale: phase 1 is the q228 batched-walk shape — 4 rounds of ONE
-    // frontier-keyed equi-join, graph traffic independent of source count
-    // (sources multiply only the (s,v) state, ≤ |S|·|V| rows); the DAG is
-    // one 3-way equi-join bounded by |S|·|E|; back-prop is 3 joins keyed
-    // on (s,v). Per-round localCheckpoint + free is the PageRank cadence.
-    // Source sampling (|S|=8, deterministic smallest-id rule shared with
-    // the oracle) is the published scaling lever (Bader et al. 2007): on a
-    // real cluster |S| grows with budget while each BFS round stays one
-    // co-partitioned shuffle. Oracle: unrolled MATERIALIZED level CTEs
-    // (the q189/q224 pattern), NOT EXISTS against prior levels, and the
-    // same integer-grid back-prop as three chained CTEs.
-    ("q244_betweenness_brandes",
-      (s: SparkSession, dir: String) => {
-        val edges = t(s, dir, "lineitem").select(
-            (col("l_orderkey") % 997).as("u"),
-            (col("l_partkey") % 1200).as("w"))
-          .filter(col("u") =!= col("w") &&
-            (col("u") * 31 + col("w")) % 16 === 0)
-          .distinct().localCheckpoint()
-        val srcs = edges.select(col("u")).distinct()
-          .orderBy(col("u")).limit(8).select(col("u").as("s"))
-        var bfs = srcs.select(col("s"), col("s").as("v"),
-          lit(0).as("dist"), lit(1L).as("sigma")).localCheckpoint()
-        var frontier = bfs
-        for (i <- 1 to 4) {
-          val next = edges
-            .join(frontier.select(col("s"), col("v").as("u"), col("sigma")),
-              Seq("u"))
-            .groupBy(col("s"), col("w").as("v"))
-            .agg(sum(col("sigma")).as("sigma"))
-            .join(bfs.select(col("s"), col("v")), Seq("s", "v"), "left_anti")
-            .select(col("s"), col("v"), lit(i).as("dist"), col("sigma"))
-            .localCheckpoint()
-          val prevBfs = bfs
-          bfs = prevBfs.unionByName(next).localCheckpoint()
-          if (frontier ne prevBfs) Scoped.free(frontier)
-          Scoped.free(prevBfs)
-          frontier = next
-        }
-        Scoped.free(frontier)
-        // shortest-path DAG restricted to the horizon: edge (v→w) is a
-        // DAG edge for source s iff dist_s(w) = dist_s(v) + 1
-        val dag = bfs.as("a")
-          .join(edges, col("a.v") === col("u"))
-          .join(bfs.as("b"),
-            col("b.s") === col("a.s") && col("b.v") === col("w") &&
-              col("b.dist") === col("a.dist") + 1)
-          .select(col("a.s").as("s"), col("a.v").as("pv"),
-            col("a.sigma").as("psig"), col("b.v").as("wv"),
-            col("b.sigma").as("wsig"), col("b.dist").as("wdist"))
-          .localCheckpoint()
-        Scoped.free(bfs)
-        Scoped.free(edges)
-        // δ' back-prop, deepest first: dist-4 vertices have δ'=0 (no
-        // successors inside the horizon), so d3 folds the bare 10⁶ grid
-        // unit; each level is checkpointed because it feeds TWO consumers
-        // (the next level's join + the final union)
-        val d3 = dag.filter(col("wdist") === 4)
-          .groupBy(col("s"), col("pv").as("v"))
-          .agg(sum(expr("(psig * 1000000) div wsig")).as("delta"))
-          .localCheckpoint()
-        val d2 = dag.filter(col("wdist") === 3)
-          .join(d3.select(col("s"), col("v").as("wv"),
-            col("delta").as("wdelta")), Seq("s", "wv"), "left_outer")
-          .groupBy(col("s"), col("pv").as("v"))
-          .agg(sum(expr(
-            "(psig * (1000000 + coalesce(wdelta, 0L))) div wsig"))
-            .as("delta"))
-          .localCheckpoint()
-        val d1 = dag.filter(col("wdist") === 2)
-          .join(d2.select(col("s"), col("v").as("wv"),
-            col("delta").as("wdelta")), Seq("s", "wv"), "left_outer")
-          .groupBy(col("s"), col("pv").as("v"))
-          .agg(sum(expr(
-            "(psig * (1000000 + coalesce(wdelta, 0L))) div wsig"))
-            .as("delta"))
-        Scoped.releaseAfterUse(dag, d3, d2)
-        d1.unionByName(d2).unionByName(d3)
-          .groupBy(col("v")).agg(sum(col("delta")).as("bc6"))
-          .filter(col("bc6") > 0L)
-          .orderBy(col("bc6").desc, col("v"))
-          .limit(20)
-      },
-      Some("""WITH edges AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey % 997 AS u, l_partkey % 1200 AS w
-          FROM lineitem
-          WHERE l_orderkey % 997 <> l_partkey % 1200
-            AND ((l_orderkey % 997) * 31 + (l_partkey % 1200)) % 16 = 0),
-        srcs AS (SELECT u AS s FROM (SELECT DISTINCT u FROM edges)
-          ORDER BY u LIMIT 8),
-        b0 AS MATERIALIZED (SELECT s, s AS v, 0 AS dist,
-          CAST(1 AS BIGINT) AS sigma FROM srcs),
-        b1 AS MATERIALIZED (
-          SELECT c.s, c.v, 1 AS dist, c.sigma FROM (
-            SELECT b.s, e.w AS v, CAST(SUM(b.sigma) AS BIGINT) AS sigma
-            FROM b0 b JOIN edges e ON e.u = b.v GROUP BY 1, 2) c
-          WHERE NOT EXISTS (SELECT 1 FROM b0 p
-            WHERE p.s = c.s AND p.v = c.v)),
-        b2 AS MATERIALIZED (
-          SELECT c.s, c.v, 2 AS dist, c.sigma FROM (
-            SELECT b.s, e.w AS v, CAST(SUM(b.sigma) AS BIGINT) AS sigma
-            FROM b1 b JOIN edges e ON e.u = b.v GROUP BY 1, 2) c
-          WHERE NOT EXISTS (SELECT 1 FROM b0 p
-              WHERE p.s = c.s AND p.v = c.v)
-            AND NOT EXISTS (SELECT 1 FROM b1 p
-              WHERE p.s = c.s AND p.v = c.v)),
-        b3 AS MATERIALIZED (
-          SELECT c.s, c.v, 3 AS dist, c.sigma FROM (
-            SELECT b.s, e.w AS v, CAST(SUM(b.sigma) AS BIGINT) AS sigma
-            FROM b2 b JOIN edges e ON e.u = b.v GROUP BY 1, 2) c
-          WHERE NOT EXISTS (SELECT 1 FROM b0 p
-              WHERE p.s = c.s AND p.v = c.v)
-            AND NOT EXISTS (SELECT 1 FROM b1 p
-              WHERE p.s = c.s AND p.v = c.v)
-            AND NOT EXISTS (SELECT 1 FROM b2 p
-              WHERE p.s = c.s AND p.v = c.v)),
-        b4 AS MATERIALIZED (
-          SELECT c.s, c.v, 4 AS dist, c.sigma FROM (
-            SELECT b.s, e.w AS v, CAST(SUM(b.sigma) AS BIGINT) AS sigma
-            FROM b3 b JOIN edges e ON e.u = b.v GROUP BY 1, 2) c
-          WHERE NOT EXISTS (SELECT 1 FROM b0 p
-              WHERE p.s = c.s AND p.v = c.v)
-            AND NOT EXISTS (SELECT 1 FROM b1 p
-              WHERE p.s = c.s AND p.v = c.v)
-            AND NOT EXISTS (SELECT 1 FROM b2 p
-              WHERE p.s = c.s AND p.v = c.v)
-            AND NOT EXISTS (SELECT 1 FROM b3 p
-              WHERE p.s = c.s AND p.v = c.v)),
-        bfs AS MATERIALIZED (
-          SELECT * FROM b0 UNION ALL SELECT * FROM b1
-          UNION ALL SELECT * FROM b2 UNION ALL SELECT * FROM b3
-          UNION ALL SELECT * FROM b4),
-        dag AS MATERIALIZED (
-          SELECT a.s, a.v AS pv, a.sigma AS psig,
-            b.v AS wv, b.sigma AS wsig, b.dist AS wdist
-          FROM bfs a
-          JOIN edges e ON e.u = a.v
-          JOIN bfs b ON b.s = a.s AND b.v = e.w AND b.dist = a.dist + 1),
-        d3 AS MATERIALIZED (SELECT s, pv AS v,
-            CAST(SUM((psig * 1000000) // wsig) AS BIGINT) AS delta
-          FROM dag WHERE wdist = 4 GROUP BY 1, 2),
-        d2 AS MATERIALIZED (SELECT g.s, g.pv AS v,
-            CAST(SUM((g.psig * (1000000 + COALESCE(dd.delta, 0)))
-              // g.wsig) AS BIGINT) AS delta
-          FROM dag g LEFT JOIN d3 dd ON dd.s = g.s AND dd.v = g.wv
-          WHERE g.wdist = 3 GROUP BY 1, 2),
-        d1 AS (SELECT g.s, g.pv AS v,
-            CAST(SUM((g.psig * (1000000 + COALESCE(dd.delta, 0)))
-              // g.wsig) AS BIGINT) AS delta
-          FROM dag g LEFT JOIN d2 dd ON dd.s = g.s AND dd.v = g.wv
-          WHERE g.wdist = 2 GROUP BY 1, 2)
-        SELECT v, CAST(SUM(delta) AS BIGINT) AS bc6
-        FROM (SELECT * FROM d1 UNION ALL SELECT * FROM d2
-          UNION ALL SELECT * FROM d3)
-        GROUP BY v HAVING SUM(delta) > 0
-        ORDER BY bc6 DESC, v LIMIT 20"""))
+      })
   )
 
   /** q113's core, parameterized by per-retriever depth `topK`: each side

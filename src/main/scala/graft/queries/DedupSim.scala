@@ -3569,8 +3569,8 @@ object DedupSim {
         // the blocked cosine self-join feeds TWO consumers (top-3 negs
         // and the same-label max), so it is projected down to 5 slim
         // columns — the embeddings never survive the join — and
-        // checkpointed once (ADVICE r15; the q180 two-consumer
-        // discipline). The rank<=3 WindowGroupLimit rewrite is a
+        // checkpointed once (ADVICE r15: a two-consumer frame left lazy
+        // runs twice). The rank<=3 WindowGroupLimit rewrite is a
         // physical rewrite on the window node itself, so the PlanSpec
         // pin holds over the checkpointed scan.
         val pairs = base

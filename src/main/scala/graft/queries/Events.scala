@@ -1607,9 +1607,9 @@ object Events {
     // question). Exactness by construction: v lives on a 1e-6 integer
     // grid and each update is v'(a) = 10⁶ + (Σ_b c_ab·v(b)) div c_a —
     // BIGINT multiply-add and ONE floor division per state per step, so
-    // both engines produce identical bits with no float anywhere (the
-    // q244 discipline). Overflow is structural: v ≤ H·10⁶, c_ab sums ≤
-    // |rows|, product ≤ 8·10⁶·|rows| ≪ 2⁶³.
+    // both engines produce identical bits with no float anywhere.
+    // Overflow is structural: v ≤ H·10⁶, c_ab sums ≤ |rows|, product ≤
+    // 8·10⁶·|rows| ≪ 2⁶³.
     //
     // Scale: the transition table is ≤ |types|² rows (one user-
     // partitioned lag window builds it — q243's shape); each of the 8
@@ -1632,7 +1632,7 @@ object Events {
         // transient (non-absorbing) states: everything but 'purchase'
         val states = ca.filter(col("a") =!= "purchase")
         var v = states.select(col("a"), lit(0L).as("v6"))
-        // q228's release cadence: `prev` only ever holds a CHECKPOINTED
+        // release cadence: `prev` only ever holds a CHECKPOINTED
         // step (freeing the initial lazy frame would walk through to
         // ca's checkpoint, which `states` still reads every iteration)
         var prev: DataFrame = null

@@ -882,14 +882,13 @@ object TextOps {
     // C / S division with C a shared 17-digit literal — bit-identical
     // cross-engine. The gate pins the REGISTER STATE (m_hit, s_sum),
     // the estimate, and its signed ‱ error against the exact distinct.
-    // The estimate rides the SAME corrected estimator as q212's
-    // HyperBall registers (VERDICT r17 #2 — one sketch family, one
-    // estimator): linear counting m·ln(m/V) when empty registers V > 0
-    // and raw ≤ 2.5·m = 640 (ln cross-engine parity is the pinned
-    // q187/q191 discipline). Fixture sources sit far above the branch
-    // point, so on the gate the branch is dormant — LogLogSmallRangeSpec
-    // pins it live on a crafted small-cardinality corpus, where linear
-    // counting is EXACT for collision-free register sets.
+    // The estimate is the corrected LogLog estimator: linear counting
+    // m·ln(m/V) when empty registers V > 0 and raw ≤ 2.5·m = 640 (ln
+    // cross-engine parity is the pinned q187/q191 discipline). Fixture
+    // sources sit far above the branch point, so on the gate the branch
+    // is dormant — LogLogSmallRangeSpec pins it live on a crafted
+    // small-cardinality corpus, where linear counting is EXACT for
+    // collision-free register sets.
     //
     // Scale: the sketch is ONE corpus pass with map-side partial MAX
     // into ≤ |sources|·256 cells — no token shuffle; only the exact
@@ -2433,7 +2432,7 @@ object TextOps {
           .agg(count(lit(1)).as("m"), sum(col("x6")).as("sx"),
             sum(col("y6")).as("sy"),
             sum(expr("x6 * y6")).as("sxy"), sum(expr("x6 * x6")).as("sxx"))
-          // exact-remainder division (the q180 lesson, on BOTH engines):
+          // exact-remainder division (on BOTH engines):
           // Spark's decimal div rounds its intermediate quotient at scale
           // 6 (and integer `//`/`div` semantics, though measured identical
           // across engines — ADVICE r20 — are convention-sensitive on
@@ -2529,7 +2528,7 @@ object TextOps {
           .agg(count(lit(1)).as("m"), sum(col("x6")).as("sx"),
             sum(col("y6")).as("sy"),
             sum(expr("x6 * y6")).as("sxy"), sum(expr("x6 * x6")).as("sxx"))
-          // exact-remainder division (the q180/q187 lesson)
+          // exact-remainder division (the q187 lesson)
           .withColumn("bn", expr("cast(m * sxy - sx * sy as decimal(38,0)) * 10000 " +
             "+ (m * sxx - sx * sx) div 2"))
           .withColumn("bd", expr("m * sxx - sx * sx"))

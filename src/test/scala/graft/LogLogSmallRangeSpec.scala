@@ -1,14 +1,12 @@
 package graft
 
-/** Pins q210's small-range linear-counting branch LIVE (VERDICT r17 #2:
-  * one corrected estimator across the q210/q212 sketch family): the
-  * driver gate's fixture sources sit far above the 2.5·m = 640 branch
+/** Pins q210's small-range linear-counting branch LIVE (VERDICT r17 #2):
+  * the oracle gate's fixture sources sit far above the 2.5·m = 640 branch
   * point, so the branch is dormant there; this spec drives the SAME
   * catalog entry over a crafted corpus where the branch must fire — and
   * where linear counting is EXACT for a collision-free register set —
   * plus a large source where the raw harmonic path must be taken
-  * unchanged. The q212 twin of this pin is AnfSpec's hop-0 exactness
-  * (|B(v,0)| = 1 always sits in the linear-counting range).
+  * unchanged.
   */
 class LogLogSmallRangeSpec extends SparkSpec {
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Contracts of the 165-seal operator additions (q152–q168) beyond the
+/** Contracts of the 165-seal operator additions (q152–q206) beyond the
   * DuckDB hash gate: structural invariants that must hold at ANY scale
   * factor (the gate pins exact values at sf0.01; these pin the algebra
   * the values are supposed to obey). All run on sf0.001 so the suite
@@ -146,22 +146,6 @@ class PipelineOpsSpec extends SparkSpec {
     }
   }
 
-  test("q168: BFS levels are min-hop — level 1 is exactly v0's live out-neighborhood") {
-    val rows = SparkEntry.queries("q168_bfs_levels")(spark, dir).collect()
-      .map(r => (r.getAs[String]("title"), r.getAs[Long]("level")))
-    assert(rows.count(_._2 == 0L) === 1)
-    assert(rows.forall(_._2 <= 3L))
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
-    val titles = li.select(concat(lit("v"), col("l_orderkey") % 997).as("t"))
-      .distinct().collect().map(_.getString(0)).toSet
-    val hop1 = li.filter(col("l_orderkey") % 997 === 0)
-      .select(concat(lit("v"), col("l_partkey") % 1200).as("d"))
-      .distinct().collect().map(_.getString(0)).toSet
-      .filter(titles.contains).filter(_ != "v0")
-    assert(rows.filter(_._2 == 1L).map(_._1).toSet === hop1,
-      "level 1 == live out-neighbors of v0 (minus the seed)")
-  }
-
   test("q174: bins partition the corpus and the ECE is the bins' own weighted gap") {
     val rows = SparkEntry.queries("q174_calibration_report")(spark, dir).collect()
     val total = spark.read.parquet(s"$dir/documents.parquet").count()
@@ -271,41 +255,6 @@ class PipelineOpsSpec extends SparkSpec {
         s"anchor $a negatives not similarity-ordered")
       assert(byRk.map(_._6).distinct.length === 1, s"anchor $a has one positive")
     }
-  }
-
-  test("q180: output equals an exact integer HITS reference, bit for bit") {
-    // the gate pins sf0.01 against DuckDB; this pins the RECURRENCE
-    // itself — a from-scratch BigInt power iteration with the same 1e-9
-    // grid and floor normalization, driver-side over the sf0.001 graph
-    val edges = spark.read.parquet(s"$dir/lineitem.parquet")
-      .select((col("l_orderkey") % 997).as("src"), (col("l_partkey") % 1200).as("dst"))
-      .distinct().collect().map(r => (r.getLong(0), r.getLong(1)))
-    val verts = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted
-    val out = edges.groupBy(_._1).map { case (s, es) => s -> es.map(_._2) }
-    val in = edges.groupBy(_._2).map { case (d, es) => d -> es.map(_._1) }
-    var h = verts.map(_ -> BigInt(1000000000L)).toMap
-    var a = h
-    for (_ <- 1 to 5) {
-      val aRaw = verts.map(v => v -> in.getOrElse(v, Array.empty[Long]).map(h).sum).toMap
-      val hRaw = verts.map(v => v -> out.getOrElse(v, Array.empty[Long]).map(a).sum).toMap
-      val (at, ht) = (aRaw.values.sum, hRaw.values.sum)
-      a = aRaw.map { case (v, x) => v -> x * 1000000000L / at }
-      h = hRaw.map { case (v, x) => v -> x * 1000000000L / ht }
-    }
-    val got = SparkEntry.queries("q180_hits")(spark, dir).collect()
-      .map(r => (r.getAs[String]("title"), r.getAs[Long]("hub9"), r.getAs[Long]("auth9")))
-    assert(got.length === verts.length)
-    got.foreach { case (title, hub9, auth9) =>
-      val v = title.drop(1).toLong
-      assert(BigInt(hub9) === h(v), s"hub($title)")
-      assert(BigInt(auth9) === a(v), s"auth($title)")
-    }
-    // L1 discipline: each normalized score vector sums to 1e9 minus only
-    // the floor loss (< 1 grid unit per vertex)
-    val hubSum = got.map(_._2).sum
-    val authSum = got.map(_._3).sum
-    assert(hubSum <= 1000000000L && hubSum > 1000000000L - verts.length)
-    assert(authSum <= 1000000000L && authSum > 1000000000L - verts.length)
   }
 
   test("q181: every planted spliced twin is detected; overlap algebra holds") {

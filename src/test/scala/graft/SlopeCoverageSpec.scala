@@ -22,7 +22,7 @@ class SlopeCoverageSpec extends AnyFunSuite {
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("SCALING.md")),
       java.nio.charset.StandardCharsets.UTF_8)
     // Line-anchored ledger-row match (ADVICE r18): a query id appearing
-    // in PROSE (a cross-reference like "q225 derives from q212's walk")
+    // in PROSE (a cross-reference like "q241 scores q184's labeling")
     // must not satisfy the gate — only a real measured row of the shape
     // `| qNNN name | <number>` counts, in either the raw-key or the
     // first-underscore-to-space ledger spelling.

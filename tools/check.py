@@ -1,8 +1,13 @@
 #!/usr/bin/env python3
 """Local mimic of the driver's correctness gate: run graft.Verify at a given
 sf dir, then run each oracle SQL in DuckDB over the same parquet tables and
-compare values (columns sorted by name, rows sorted)."""
-import json, subprocess, sys, glob, os
+compare values (columns sorted by name, rows sorted).
+
+Every query Verify lists in failures.txt counts as a failure. Before Verify
+runs, the query output dirs an earlier run left in OUT are removed, so a
+query that throws before its write, or one no longer in the catalog, cannot
+pass on stale parquet."""
+import json, subprocess, sys, glob, os, re, shutil
 import duckdb
 import pandas as pd
 
@@ -11,10 +16,20 @@ OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 ONLY = sys.argv[3].split(",") if len(sys.argv) > 3 else None
 SKIP_VERIFY = os.environ.get("SKIP_VERIFY") == "1"
 
+def wanted(name):
+    return ONLY is None or name in ONLY
+
 if not SKIP_VERIFY:
+    for d in glob.glob(f"{OUT}/q*/"):  # Verify's per-query parquet dirs
+        if re.fullmatch(r"q\d+_\w+", os.path.basename(d.rstrip("/"))):
+            shutil.rmtree(d)
+    for f in ("failures.txt", "oracle_sql.json"):
+        if os.path.exists(f"{OUT}/{f}"):
+            os.remove(f"{OUT}/{f}")
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
-        capture_output=True, text=True, cwd="/root/repo", timeout=3600)
+        capture_output=True, text=True, timeout=3600,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     sys.stdout.write("\n".join(r.stdout.splitlines()[-5:]) + "\n")
     for line in r.stderr.splitlines():
         if "[verify]" in line:
@@ -36,8 +51,15 @@ def canon(df):
     return df
 
 fails = []
+# "[verify] <name> failed: <class> <msg>", one line per query that threw
+if os.path.exists(f"{OUT}/failures.txt"):
+    for line in open(f"{OUT}/failures.txt"):
+        if line.strip():
+            print(line.rstrip())
+            fails.append(line.split()[1])
+
 for name in sorted(oracle):
-    if ONLY and name not in ONLY:
+    if not wanted(name) or name in fails:
         continue
     sql = oracle[name]
     spark_dir = f"{OUT}/{name}"
@@ -73,7 +95,7 @@ for name in sorted(oracle):
 # rows-only checks for oracle-less queries
 for d in sorted(glob.glob(f"{OUT}/*/")):
     name = os.path.basename(d.rstrip("/"))
-    if name in oracle: continue
+    if name in oracle or not wanted(name) or name in fails: continue
     try:
         n = con.sql(f"SELECT COUNT(*) FROM '{d}/*.parquet'").fetchone()[0]
         print(f"{name}: rows-only rows={n}" + (" (EMPTY!)" if n == 0 else ""))
