@@ -138,13 +138,14 @@ object SearchCli {
 
   val Usage = "usage: SearchCli <serveDir> <docCount> [--ranked] <term> [term...]"
 
-  /** `<docCount>` must be an integer and at least one term must follow;
-    * `--ranked` may sit anywhere after `<docCount>`. */
+  /** `<docCount>` must be a positive integer and at least one term must
+    * follow; `--ranked` may sit anywhere after `<docCount>`. A count ≤ 0
+    * would make every idf `ln(docCount/df)` NULL, printed as 0.000000. */
   def parse(args: Array[String]): Either[String, Args] = {
     val rest = args.drop(2)
     val terms = rest.filterNot(_ == "--ranked").toSeq
     args.lift(1).flatMap(_.toLongOption) match {
-      case Some(docCount) if terms.nonEmpty =>
+      case Some(docCount) if docCount > 0 && terms.nonEmpty =>
         Right(Args(args(0), docCount, rest.contains("--ranked"), terms))
       case _ => Left(Usage)
     }

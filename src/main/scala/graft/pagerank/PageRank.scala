@@ -99,10 +99,18 @@ object PageRank {
     * loss mid-iteration recovers from the last checkpoint instead of
     * recomputing the whole chain. Default (None) uses `localCheckpoint` —
     * fastest, right for local mode and for clusters where re-running the
-    * job on failure is acceptable. */
+    * job on failure is acceptable.
+    *
+    * `quantize`: when `Some(s)`, each iteration's damped rank is snapped
+    * to the 1/s grid (`⌊pr·s + 0.5⌋ / s`) before it is checkpointed, so a
+    * second engine computing the same iteration (q29's DuckDB recursive
+    * CTE) lands on the identical grid — float summation-order drift never
+    * accumulates. The Δ counter still reads the unsnapped mass. Default
+    * (None) leaves the plan untouched. */
   def run(graph0: DataFrame, minIter: Int = 10, tol: Double = 0.2,
       maxIter: Int = 50, alpha: Double = 0.15,
-      checkpointDir: Option[String] = None): Result = {
+      checkpointDir: Option[String] = None,
+      quantize: Option[Double] = None): Result = {
     val spark = graph0.sparkSession
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     def save(df: DataFrame): DataFrame =
@@ -123,7 +131,10 @@ object PageRank {
       // per iteration, not two (the Spark twin of the reference's Hadoop
       // counter, which is likewise collected by the main job).
       val obs = org.apache.spark.sql.Observation(s"pr_delta_$i")
-      val stepped = save(step(g, n, alpha)
+      val damped = step(g, n, alpha)
+      val snapped = quantize.fold(damped)(s =>
+        damped.withColumn("pr", floor(col("pr") * s + 0.5) / s))
+      val stepped = save(snapped
         .observe(obs, sum(floor(col("delta") * 1000)).cast("long").as("c")))
       val counter = obs.get("c") match {
         case l: java.lang.Long => l.longValue()

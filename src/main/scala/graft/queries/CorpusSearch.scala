@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{Scoped, Tables}
 import graft.core.Portable.explodeLean
 import graft.graph.GraphBuilder
-import graft.pagerank.{PageRank, PregelBackend}
+import graft.pagerank.PageRank
 
 /** The reference's search-engine capabilities re-expressed over the
   * driver fixtures: tokenization (ref P4), inverted index with df cutoff
@@ -110,9 +110,8 @@ object CorpusSearch {
   }
 
   /** Recursive-CTE oracle for 10 power iterations over [[keyGraphDocs]]
-    * with per-iteration 1e-9 quantization — shared verbatim by q29 (the
-    * DataFrame loop) and q47 (the GraphX backend): both engines must land
-    * on the identical grid, so one oracle hash-gates both backends. */
+    * with per-iteration 1e-9 quantization — q29's oracle: `PageRank.run`
+    * and this CTE must land on the identical grid. */
   private val keyGraphFixed10Sql =
     """WITH RECURSIVE docs AS (
           SELECT 'v' || CAST(l_orderkey % 997 AS VARCHAR) AS title,
@@ -542,69 +541,20 @@ object CorpusSearch {
             ELSE mutual * 10000 // m_edges END AS recip4
         FROM mo, mu""")),
 
-    // ---- hash-checked iterative PageRank: exactly 10 power iterations
-    // (the reference's minimum, which is also where this graph converges)
-    // with per-iteration 1e-9 quantization so both engines stay on the
-    // same grid — cross-engine double-summation drift (~1e-16/iter) can
-    // never accumulate. The oracle is a DuckDB RECURSIVE CTE computing the
-    // identical iteration; zero-in-mass vertices (the NULL sentinel when no
-    // page dangles) are kept alive via an outer join against the vertex
-    // set. q25 keeps the reference's dynamic convergence policy
+    // ---- hash-checked iterative PageRank: the production loop
+    // (PageRank.run, the one RankPages runs) for exactly 10 power
+    // iterations (the reference's minimum, which is also where this graph
+    // converges) with per-iteration 1e-9 quantization so both engines stay
+    // on the same grid — cross-engine double-summation drift (~1e-16/iter)
+    // can never accumulate. The oracle is a DuckDB RECURSIVE CTE computing
+    // the identical iteration; zero-in-mass vertices (the NULL sentinel
+    // when no page dangles) are kept alive via an outer join against the
+    // vertex set. q25 keeps the reference's dynamic convergence policy
     // (rows-only; golden-spec-validated against the scalar model).
     ("q29_pagerank_fixed10",
       (s: SparkSession, dir: String) => {
-        // Materialize the graph ONCE — without this every iteration's
-        // `g0.select("title")` re-runs the whole 600k-row build (groupBy +
-        // semi-join + collect_set), turning 10 iterations into 10 rebuilds.
-        val g0 = GraphBuilder.build(keyGraphDocs(s, dir)).localCheckpoint()
-        val n = g0.count()
-        val edges = g0.select(col("title").as("src"),
-          explode(col("links")).as("dst"), size(col("links")).as("outdeg"))
-          .localCheckpoint()
-        var pr = g0.select(col("title"), col("pr"))
-        var cp: DataFrame = null
-        for (i <- 1 to 10) {
-          // by-name join (not pr("title") === edges("src")): between
-          // checkpoints `pr` is a lazy plan that CONTAINS the edges leaf,
-          // so an attribute-id equality would be a self-join ambiguity;
-          // name-based resolution survives Spark's relation deduplication
-          val mass = edges.join(pr.withColumnRenamed("title", "src"), Seq("src"))
-            .groupBy(col("dst").as("title"))
-            .agg(sum(col("pr") / col("outdeg")).as("mass"))
-          var next = g0.select(col("title"))
-            .join(mass, Seq("title"), "left_outer")
-            .select(col("title"),
-              (floor((lit(0.15) / n + lit(0.85) * coalesce(col("mass"), lit(0.0)))
-                * 1e9 + 0.5) / 1e9).as("pr"))
-          // checkpoint every 3rd iteration: lineage stays bounded (≤ 3
-          // nested join+agg layers, analysis cost flat) while eager
-          // materialization jobs drop from 10 to 3; values are unchanged
-          // (the 1e-9 quantization happens every iteration regardless).
-          // Superseded checkpoints are freed immediately.
-          if (i % 3 == 0) {
-            val c = next.localCheckpoint()
-            if (cp != null) Scoped.free(cp)
-            cp = c
-            next = c
-          }
-          pr = next
-        }
-        // the final lazy plan reads g0, edges and the i=9 checkpoint —
-        // free all three as soon as the caller's terminal action completes
-        Scoped.releaseAfterUse(g0, edges, cp)
-        pr.orderBy(col("title"))
-      },
-      Some(keyGraphFixed10Sql)),
-
-    // ---- the SAME fixed-10 quantized iteration through the GraphX/RDD
-    // backend (PregelBackend.run): one oracle, two engines — a bench line
-    // comparing the DataFrame loop (q29) and the edge-partitioned
-    // aggregateMessages loop (q47) on the identical graph, both hash-gated
-    // against the identical recursive CTE.
-    ("q47_pagerank_pregel",
-      (s: SparkSession, dir: String) => {
         val g0 = GraphBuilder.build(keyGraphDocs(s, dir))
-        val res = PregelBackend.run(g0, minIter = 10, tol = 0.0, maxIter = 10,
+        val res = PageRank.run(g0, minIter = 10, tol = 0.0, maxIter = 10,
           quantize = Some(1e9))
         Scoped.releaseAfterUse(res.graph)
         res.graph.select(col("title"), col("pr")).orderBy(col("title"))

@@ -21,7 +21,8 @@ class CliArgsSpec extends AnyFunSuite {
   test("SearchCli: docCount must be an integer and at least one term must follow") {
     def parse(args: String*) = SearchCli.parse(args.toArray)
     Seq(Seq(), Seq("serve"), Seq("serve", "12"), Seq("serve", "12", "--ranked"),
-      Seq("serve", "--ranked", "12", "spark"), Seq("serve", "x12", "spark"))
+      Seq("serve", "--ranked", "12", "spark"), Seq("serve", "x12", "spark"),
+      Seq("serve", "0", "spark"), Seq("serve", "-5", "spark"))
       .foreach(a => assert(parse(a: _*) == Left(SearchCli.Usage), a))
     assert(parse("serve", "12", "spark", "join") ==
       Right(SearchCli.Args("serve", 12L, ranked = false, Seq("spark", "join"))))

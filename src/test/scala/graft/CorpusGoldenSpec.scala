@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.corpus.WikiCorpus
 import graft.graph.GraphBuilder
 import graft.index.InvertedIndex
-import graft.pagerank.{PageRank, PregelBackend}
+import graft.pagerank.PageRank
 import graft.search.Search
 
 /** Golden 3-doc corpus (FIXTURES.md §1a, from the reference's worked
@@ -204,26 +204,21 @@ class CorpusGoldenSpec extends SparkSpec {
     assert(hits("tend") === line.substring(70))      // runs to line end: 34 chars
   }
 
-  test("GraphX/RDD backend agrees with the DataFrame loop to 1e-9") {
+  test("quantize snaps every iteration's rank to the 1/s grid, within 5e-9 of the scalar model") {
     val g0 = GraphBuilder.build(docs.select(col("title"), col("links")))
-    val df = shortRun(g0)
-    val px = PregelBackend.run(g0, minIter = 5, maxIter = 5)
-    assert(px.iterations === df.iterations)
-    // identical Δ counter ⇒ identical stop decision under any policy
-    assert(math.abs(px.avgChange - df.avgChange) < 1e-9)
-    val a = df.graph.select("title", "pr").collect()
+    val res = PageRank.run(g0, minIter = 5, maxIter = 5, quantize = Some(1e9))
+    assert(res.iterations === 5)
+    val (expected, _) = scalarPageRank(Map("1" -> Seq("2", "4"), "2" -> Seq("1"),
+      "4" -> Seq("NULL"), "NULL" -> Seq("1", "2", "4")), minIter = 5, maxIter = 5)
+    val got = res.graph.select("title", "pr").collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val b = px.graph.select("title", "pr").collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(a.keySet === b.keySet)
-    a.foreach { case (t, pr) =>
-      assert(math.abs(pr - b(t)) < 1e-9, s"pr($t)")
+    assert(got.keySet === expected.keySet)
+    got.foreach { case (t, pr) =>
+      val scaled = pr * 1e9
+      assert(math.abs(scaled - math.rint(scaled)) < 1e-6, s"pr($t) = $pr is off the 1e-9 grid")
+      assert(math.abs(pr - expected(t)) < 5e-9, s"pr($t)")
     }
-    // links survive the round-trip through vertex ids
-    val links = px.graph.select("title", "links").collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    assert(links("1") === Seq("2", "4"))
-    px.release(); df.release()
+    res.release()
   }
 
   test("reliable checkpointing yields the identical fixpoint") {

@@ -241,9 +241,9 @@ class ScopedSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val baseline = liveBlocks()
     for (q <- Seq("q29_pagerank_fixed10", "q25_pagerank", "q31_ngram_jaccard",
-        "q32_minhash_lsh", "q34_simhash_pairs", "q47_pagerank_pregel",
-        "q49_dedup_clusters", "q103_kmeans", "q104_split_leakage",
-        "q111_cdc_chunk_dedup", "q117_mixture_apply", "q119_bpe_train_loop")) {
+        "q32_minhash_lsh", "q34_simhash_pairs", "q49_dedup_clusters",
+        "q103_kmeans", "q104_split_leakage", "q111_cdc_chunk_dedup",
+        "q117_mixture_apply", "q119_bpe_train_loop")) {
       SparkEntry.queries(q)(spark, dir)
         .write.format("noop").mode("overwrite").save()
       // <= not ==: arming inside a query sweeps abandoned entries left by

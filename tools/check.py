@@ -3,10 +3,12 @@
 sf dir, then run each oracle SQL in DuckDB over the same parquet tables and
 compare values (columns sorted by name, rows sorted).
 
-Every query Verify lists in failures.txt counts as a failure. Before Verify
-runs, the query output dirs an earlier run left in OUT are removed, so a
-query that throws before its write, or one no longer in the catalog, cannot
-pass on stale parquet."""
+A third argument (comma-separated query names) is passed to Verify as
+SPARK_GRAFT_ONLY: only those queries are built and compared, and an unknown
+name fails the run. Every query Verify lists in failures.txt counts as a
+failure. Before Verify runs, the query output dirs an earlier run left in
+OUT are removed, so a query that throws before its write, or one no longer
+in the catalog, cannot pass on stale parquet."""
 import json, subprocess, sys, glob, os, re, shutil
 import duckdb
 import pandas as pd
@@ -26,9 +28,10 @@ if not SKIP_VERIFY:
     for f in ("failures.txt", "oracle_sql.json"):
         if os.path.exists(f"{OUT}/{f}"):
             os.remove(f"{OUT}/{f}")
+    env = None if ONLY is None else dict(os.environ, SPARK_GRAFT_ONLY=sys.argv[3])
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
-        capture_output=True, text=True, timeout=3600,
+        capture_output=True, text=True, timeout=3600, env=env,
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     sys.stdout.write("\n".join(r.stdout.splitlines()[-5:]) + "\n")
     for line in r.stderr.splitlines():
