@@ -80,54 +80,16 @@ object Bench {
     * (fresh) JVM/session, before its timed pass. */
   private def warmup(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000000).selectExpr("sum(id)").collect()
-    // Materialize the encoded-media fixtures for the timed scale point
-    // OUTSIDE any timed window (VERDICT r8 #1): first-touch generation
-    // (per-doc ImageIO encode) otherwise lands inside pass 1's q64/q106.
-    try graft.multimodal.MediaFixtures.ensureAll(spark, sfDir)
-    catch {
-      case NonFatal(e) =>
-        // ADVICE r9 #4: surface the failure in the pass log — a silent
-        // skip pushes fixture generation back inside timed q64/q106 (the
-        // exact r8 regression) with nothing to explain the skew
-        System.err.println(
-          s"[bench] WARMUP: MediaFixtures.ensureAll($sfDir) FAILED — " +
-            s"fixture generation will land inside timed q64/q106: $e")
-    }
     Seq("q01_pricing_summary" -> sfDir, "q25_pagerank" -> "/root/testdata/sf0.001",
       // q29 at sf0.01 (VERDICT r8 #4): the sf0.001 q25 warm left the
       // first sf0.1 checkpoint-iteration query paying ~2x first-touch in
       // pass 1 (r8 per_run 7.48/3.61/3.81 s) — shuffle + localCheckpoint
       // at sf0.01 partition sizes warms the remaining cold path
-      "q29_pagerank_fixed10" -> "/root/testdata/sf0.01",
-      // the image family warms at the TIMED sf: one untimed run of each
-      // operator makes every pass uniformly warm. The r9 targeted bench
-      // showed the asymmetry concretely: the pass whose warmup GENERATED
-      // the fixtures (extra codec/JIT exercise) ran q64 in 1.56 s while
-      // the others ran 2.5 s — the sf0.001-only warm left the decode
-      // loop under-compiled for the 10x-larger timed input
-      "q64_image_roundtrip" -> sfDir,
-      "q106_image_ahash_dedup" -> sfDir)
+      "q29_pagerank_fixed10" -> "/root/testdata/sf0.01")
       .foreach { case (q, dir) =>
         SparkEntry.queries.get(q)
           .foreach(fn => try fn(spark, dir).count() catch { case NonFatal(_) => () })
       }
-    // ImageIO codec JIT warmup: with a fresh JVM per pass, whichever of
-    // q64/q106 hits the PNG encode/decode path first absorbed 4-5 s of
-    // cold-JIT (bimodal per_run in the r7 bench). ~3000 tiny images push
-    // the codec loops past the C2 threshold in ~1 s, outside any timed
-    // window.
-    try {
-      var i = 0
-      while (i < 3000) {
-        val img = new java.awt.image.BufferedImage(8, 8,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        img.setRGB(0, 0, i)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bos.toByteArray))
-        i += 1
-      }
-    } catch { case NonFatal(_) => () }
     clearStorage(spark)
   }
 

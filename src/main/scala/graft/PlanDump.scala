@@ -20,16 +20,16 @@ object PlanDump {
 
   /** One representative per plan family: scan+agg, pushdown, broadcast
     * multiway, semi-join, search join tree, LSH band join, IVF partition
-    * pruning, payload pruning, decorrelated subqueries, value-range
+    * pruning, decorrelated subqueries, value-range
     * window, degree-ordered triangle join, broadcast kNN batch,
     * incremental band probe, broadcast contamination probe. */
   private val headline = Seq(
     "q01_pricing_summary", "q02_filter_project", "q04_multiway_join",
     "q05_semi_join", "q20_tfidf_search", "q32_minhash_lsh",
-    "q38_ann_srp_ivf", "q60_media_stats", "q67_triangle_count",
+    "q38_ann_srp_ivf", "q67_triangle_count",
     "q68_exists_subquery", "q69_rolling_range", "q74_knn_join",
     "q76_dedup_incremental", "q77_contamination", "q86_cdc_upsert",
-    "q87_zorder_layout", "q90_bloom_semi_join", "q106_image_ahash_dedup",
+    "q87_zorder_layout", "q90_bloom_semi_join",
     "q108_cm_heavy_hitters", "q111_cdc_chunk_dedup", "q116_bpe_train2",
     "q117_mixture_apply", "q118_ann_ndcg",
     // the r8 departitioned-window family + the composed pipeline/sweep:

@@ -16,8 +16,7 @@ object SparkEntry {
       graft.queries.DedupSim.catalog ++
       graft.queries.TextOps.catalog ++
       graft.queries.TextOps.catalogTrainer ++
-      graft.queries.Events.catalog ++
-      graft.queries.MultimodalQ.catalog
+      graft.queries.Events.catalog
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -31,7 +31,7 @@ object Scoped {
 
   /** The materialized RDDs behind `df`'s checkpoint leaves. Leaf-level,
     * not root-level: a projection/filter OVER a checkpoint (e.g.
-    * `checkpointed.drop("delta")`) still owns exactly those blocks. */
+    * `checkpointed.select("title", "pr")`) still owns exactly those blocks. */
   private def checkpointRdds(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.analyzed.collectLeaves()
       .collect { case l: LogicalRDD => l.rdd }
@@ -41,7 +41,7 @@ object Scoped {
     * one), CacheManager entry for a `persist` result. Safe to call twice
     * (second call is a no-op).
     *
-    * BLOCKING by default (r7 "Asked to remove block" race): a
+    * The release is BLOCKING (r7 "Asked to remove block" race): a
     * non-blocking unpersist leaves the per-block removal in flight on the
     * BlockManagerStorageEndpoint's async pool while this method returns
     * and the caller drops its last strong reference — the ContextCleaner
@@ -53,18 +53,14 @@ object Scoped {
     * one local RPC round-trip per release — for the ITERATIVE-LOOP
     * queries that free a predecessor per round (PageRank, CC, the BPE
     * trainer) the r8 bench measured it negligible (walls unchanged vs
-    * r7's non-blocking releases; q47 slightly faster). That measurement
-    * does NOT extend to the r8 image family (q106 +140%, q64 +45% the
-    * same round — confounded with fixture synthesis in the timed region,
-    * bisected in r9 by moving generation into MediaFixtures): before
-    * defaulting a blocking release inside any new hot loop, verify the
-    * wait is actually negligible there. ScopedSpec pins the
+    * r7's non-blocking releases). Before freeing inside any new hot loop,
+    * verify the wait is actually negligible there. ScopedSpec pins the
     * blocks-gone-on-return contract. */
-  def free(df: DataFrame, blocking: Boolean = true): Unit = {
+  def free(df: DataFrame): Unit = {
     checkpointRdds(df)
       .filter(_.getStorageLevel != StorageLevel.NONE)
-      .foreach(_.unpersist(blocking))
-    df.unpersist(blocking)
+      .foreach(_.unpersist(blocking = true))
+    df.unpersist(blocking = true)
   }
 
   /** Intra-query materialization actions that must NOT trigger release:

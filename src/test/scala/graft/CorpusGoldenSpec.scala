@@ -221,6 +221,16 @@ class CorpusGoldenSpec extends SparkSpec {
     res.release()
   }
 
+  test("each iteration checkpoints title, links, pr only (delta is dropped before the checkpoint)") {
+    val g0 = GraphBuilder.build(docs.select(col("title"), col("links")))
+    val res = shortRun(g0)
+    val leaves = res.graph.queryExecution.analyzed.collectLeaves()
+      .collect { case l: org.apache.spark.sql.execution.LogicalRDD => l }
+    assert(leaves.size === 1)
+    assert(leaves.head.output.map(_.name) === Seq("title", "links", "pr"))
+    res.release()
+  }
+
   test("reliable checkpointing yields the identical fixpoint") {
     val g0 = GraphBuilder.build(docs.select(col("title"), col("links")))
     val local = shortRun(g0)

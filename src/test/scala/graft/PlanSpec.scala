@@ -58,7 +58,7 @@ class PlanSpec extends SparkSpec {
 
   test("q48: sampling is a map-only filter — no shuffle before the sort") {
     // another suite may have cached this parquet — cache substitution
-    // would splice in the cached relation's unpruned FileScan (q60 note)
+    // would splice in the cached relation's unpruned FileScan
     spark.catalog.clearCache()
     val p = plan("q48_stratified_sample")
     // the md5-bucket predicate is not parquet-pushable (function of a
@@ -70,17 +70,6 @@ class PlanSpec extends SparkSpec {
     // column pruning still applies
     val readSchema = p.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     assert(!readSchema.contains("text"), readSchema)
-  }
-
-  test("q60: media stats never reads the payload bytes") {
-    // another suite may have cached this parquet — cache substitution would
-    // replace the file scan (and its ReadSchema) with an InMemoryTableScan
-    spark.catalog.clearCache()
-    val p = SparkEntry.queries("q60_media_stats")(spark, dir)
-      .queryExecution.executedPlan.toString
-    val readSchema = p.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
-    assert(!readSchema.contains("text"),
-      s"payload source column must be pruned: $readSchema")
   }
 
   test("q68: EXISTS / NOT EXISTS decorrelate to semi + anti hash joins") {
@@ -145,13 +134,6 @@ class PlanSpec extends SparkSpec {
     assert(scanOff >= 0, "no scan below the bloom filter:\n" + p.take(1200))
     assert(!below.take(scanOff).contains("Exchange"),
       "bloom filter must run map-side, directly over the scan:\n" + p.take(1200))
-  }
-
-  test("q106: aHash pairing is a blocked equi-join, never a cartesian") {
-    val p = plan("q106_image_ahash_dedup")
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      "hamming pairing must pigeonhole on blocks, not compare all pairs:\n" + p.take(1600))
-    assert(p.contains("Join"), "expected the block equi-join")
   }
 
   test("q108: the 1024-counter count-min sketch broadcasts to the probe") {

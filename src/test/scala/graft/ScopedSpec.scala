@@ -75,7 +75,7 @@ class ScopedSpec extends SparkSpec {
     val before = liveBlocks()
     df.unpersist(blocking = true) // CacheManager no-op for checkpoints
     assert(liveBlocks() === before, "Dataset.unpersist must not see checkpoint blocks")
-    Scoped.free(df, blocking = true)
+    Scoped.free(df)
     assert(liveBlocks() === before - 1)
   }
 

@@ -1135,35 +1135,4 @@ class StreamingSpec extends SparkSpec {
     assert(got.size === 10)
     got.foreach { case (id, c) => assert(c === batchAsg(id), s"vec $id") }
   }
-
-  test("videoFrameStats on a stream: the BATCH operator runs unchanged per micro-batch") {
-    // The MJPEG frame-decode path (q125) is stateless (filter →
-    // repartition → batch-bounded mapPartitions), so the exact same
-    // operator serves readStream ingestion — the batch/streaming
-    // unification the engine claims for every codec path.
-    implicit val sql = spark.sqlContext
-    import spark.implicits._
-    import graft.multimodal.Multimodal
-    val mem = MemoryStream[Multimodal.Media]
-    mem.addData(Multimodal.Media(1L, "video", Multimodal.MediaMeta(16, 16, 0, 0, 2),
-      Multimodal.synthMjpegAvi(2, 16, 16, 40000, 1L)))
-    mem.addData(
-      Multimodal.Media(2L, "video", Multimodal.MediaMeta(32, 16, 0, 0, 3),
-        Multimodal.synthMjpegAvi(3, 32, 16, 40000, 2L)),
-      Multimodal.Media(3L, "video", Multimodal.MediaMeta(0, 0, 0, 0, 0),
-        Array.fill[Byte](24)(0x2A)), // malformed container
-      Multimodal.Media(4L, "image", Multimodal.MediaMeta(8, 8, 3, 0, 0),
-        Array.emptyByteArray)) // non-video: filtered out
-    val q = Multimodal.videoFrameStats(spark, mem.toDS())
-      .writeStream.format("memory").queryName("frame_decode")
-      .outputMode(OutputMode.Append()).start()
-    runToCompletion(q)
-    val rows = spark.table("frame_decode")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3),
-        r.getBoolean(5))).sortBy(t => (t._1, t._2)).toSeq
-    assert(rows === Seq(
-      (1L, 0, 16, 16, true), (1L, 1, 16, 16, true),
-      (2L, 0, 32, 16, true), (2L, 1, 32, 16, true), (2L, 2, 32, 16, true),
-      (3L, -1, 0, 0, false)))
-  }
 }
