@@ -14,7 +14,9 @@ package graft
   * entries are ordered first in the file.
   *
   * Usage: `sbt "runMain graft.PlanDump"` (optional args: sfDir,
-  * comma-separated query names).
+  * comma-separated query names). With names, only those sections of the
+  * committed PLANS.md are refreshed in place (a missing one is appended);
+  * an unknown name exits with status 2 before any query runs.
   */
 object PlanDump {
 
@@ -110,31 +112,65 @@ object PlanDump {
     // pair generation over bounded per-gram source sets (q205)
     "q202_ecdf_table", "q204_cluster_safe_split", "q205_source_overlap")
 
+  /** PLANS.md's header, above the first query section. */
+  private def header(dir: String): String =
+    s"""# PLANS — captured physical plans of ALL catalog queries (${new java.io.File(dir).getName}, AQE initial)
+       |
+       |Auto-generated by `sbt "runMain graft.PlanDump"`; regenerate after
+       |planner-affecting changes. Binding plan assertions live in PlanSpec —
+       |this file is the full-text reference those assertions summarize.
+       |Plan-family representatives (the curated headline set in
+       |PlanDump.scala) come first; the rest follow in catalog order.
+       |PlansCoverageSpec asserts every `SparkEntry.queries` key has a
+       |heading here.
+       |""".stripMargin
+
+  /** One query's section: its heading, a blank line, the fenced plan. */
+  private[graft] def section(name: String, plan: String): String =
+    s"## $name\n\n```\n${plan.trim}\n```\n"
+
+  /** `doc` with each of `sections` (name, text) put in place of the
+    * section of the same name, or appended when `doc` has none. A section
+    * runs from its `## name` line (outside code fences) up to the blank
+    * lines before the next heading or the end; the header, those blank
+    * lines and every other section keep their bytes. */
+  private[graft] def splice(doc: String, sections: Seq[(String, String)]): String =
+    sections.foldLeft(doc) { case (d, (name, text)) =>
+      val lines = d.split("\n", -1)
+      val fenced = lines.scanLeft(false)((in, l) => in != l.startsWith("```"))
+      val headings = lines.indices.filter(i => !fenced(i) && lines(i).startsWith("## "))
+      headings.indexWhere(i => lines(i) == s"## $name") match {
+        case -1 => d.stripSuffix("\n") + "\n\n" + text
+        case k =>
+          val from = headings(k)
+          var until = headings.lift(k + 1).getOrElse(lines.length)
+          while (until > from + 1 && lines(until - 1).isEmpty) until -= 1
+          (lines.take(from) ++ text.stripSuffix("\n").split("\n", -1) ++ lines.drop(until))
+            .mkString("\n")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    // full sweep: headline (plan-family representatives) first, then
-    // every remaining catalog key in numeric order
+    // a query list refreshes only those sections of the committed file;
+    // without one, the full sweep: headline (plan-family representatives)
+    // first, then every remaining catalog key in numeric order
+    val only = args.lift(1).map { list =>
+      graft.cli.Cli.orExit(SparkEntry.parseOnly(Some(list), SparkEntry.queries.keySet))
+      list.split(",").toSeq.distinct
+    }
     val rest = SparkEntry.queries.keySet.diff(headline.toSet).toSeq
       .sortBy(n => ("""\d+""".r.findFirstIn(n).map(_.toInt).getOrElse(999), n))
-    val names = if (args.length > 1) args(1).split(",").toSeq else headline ++ rest
+    val names = only.getOrElse(headline ++ rest)
     val spark = Session.build(cpus = 4, logLevel = "ERROR")
-    val sb = new StringBuilder(
-      s"""# PLANS — captured physical plans of ALL catalog queries (${new java.io.File(dir).getName}, AQE initial)
-         |
-         |Auto-generated by `sbt "runMain graft.PlanDump"`; regenerate after
-         |planner-affecting changes. Binding plan assertions live in PlanSpec —
-         |this file is the full-text reference those assertions summarize.
-         |Plan-family representatives (the curated headline set in
-         |PlanDump.scala) come first; the rest follow in catalog order.
-         |PlansCoverageSpec asserts every `SparkEntry.queries` key has a
-         |heading here.
-         |""".stripMargin)
-    names.foreach { n =>
-      val plan = SparkEntry.queries(n)(spark, dir).queryExecution.executedPlan.toString
-      sb ++= s"\n## $n\n\n```\n${plan.trim}\n```\n"
+    val sections = names.map(n =>
+      n -> section(n, SparkEntry.queries(n)(spark, dir).queryExecution.executedPlan.toString))
+    val path = java.nio.file.Paths.get("PLANS.md")
+    val doc = only match {
+      case Some(_) => splice(java.nio.file.Files.readString(path), sections)
+      case None => header(dir) + sections.map("\n" + _._2).mkString
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get("PLANS.md"),
-      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.write(path, doc.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(s"PLANS.md written (${names.size} queries)")
     spark.stop()
   }

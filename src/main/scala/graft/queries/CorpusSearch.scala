@@ -1623,9 +1623,10 @@ object CorpusSearch {
     //
     // Scale: q208's argument for stages A–D; the index build is the
     // q21/A6 shape (two term-hashed shuffles with map-side partial
-    // aggs); the search is runtime-small-side joins AQE broadcasts
-    // (search/Search.scala's header). Everything driver-side is
-    // bounded: one count() on a 25-row table, one iterations require.
+    // aggs); the search is two Parquet probes and a driver-side assembly
+    // bounded by the df cutoff (search/Search.scala's header). Everything
+    // driver-side is bounded: one count() on a 25-row table, one
+    // iterations require, the search's hits.
     ("q215_cli_index_search",
       (s: SparkSession, dir: String) => {
         val out = Relational.scratchDir("graft_q215_cli_")

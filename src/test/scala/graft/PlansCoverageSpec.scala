@@ -39,4 +39,27 @@ class PlansCoverageSpec extends AnyFunSuite {
     assert(stale.isEmpty,
       s"PLANS.md headings with no catalog query: ${stale.mkString(", ")}")
   }
+
+  test("PlanDump.splice refreshes named sections in place and appends missing ones") {
+    import PlanDump.{section, splice}
+    val head = "# PLANS\n\nheader text\n"
+    val doc = head + Seq(section("q01_a", "Scan a\n+- Filter"), section("q02_b", "Scan b"),
+      section("q03_c", "Scan c")).map("\n" + _).mkString
+    // a middle section: everything else keeps its bytes
+    assert(splice(doc, Seq("q02_b" -> section("q02_b", "Scan b2\n+- Sort"))) ===
+      doc.replace("```\nScan b\n```", "```\nScan b2\n+- Sort\n```"))
+    // the last section, and the first
+    assert(splice(doc, Seq("q03_c" -> section("q03_c", "C"))) ===
+      doc.replace("```\nScan c\n```", "```\nC\n```"))
+    assert(splice(doc, Seq("q01_a" -> section("q01_a", "A"))) ===
+      doc.replace("```\nScan a\n+- Filter\n```", "```\nA\n```"))
+    // a section the file lacks goes at the end, in the full dump's layout
+    assert(splice(doc, Seq("q04_d" -> section("q04_d", "D"))) === doc + "\n" + section("q04_d", "D"))
+    // a section given its own text changes nothing
+    assert(splice(doc, Seq("q02_b" -> section("q02_b", "Scan b"))) === doc)
+    // a `## ` line inside a fenced plan is not a heading
+    val fenced = head + "\n" + section("q05_e", "## q06_f\nScan e") + "\n" + section("q06_f", "F")
+    assert(splice(fenced, Seq("q06_f" -> section("q06_f", "F2"))) ===
+      fenced.replace("```\nF\n```", "```\nF2\n```"))
+  }
 }
