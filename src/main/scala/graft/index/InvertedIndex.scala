@@ -1,7 +1,9 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.corpus.WikiCorpus
 
 /** Positional inverted index (SURVEY.md §2.4 A6/A7, §2.2 P5).
@@ -10,19 +12,25 @@ import graft.corpus.WikiCorpus
   * ofs: array<struct<line_off, char_off>>>>)` — postings sorted by title
   * (the reference's (term,title) secondary sort,
   * /root/reference/src/main/scala/invertedIndex.scala:83-86), occurrence
-  * offsets in document order, and postings lists with df ≥ cutoff (3000)
-  * silently dropped (invertedIndex.scala:93-94).
+  * offsets in (line_off, char_off) order, and postings lists with
+  * df ≥ cutoff (3000) silently dropped (invertedIndex.scala:93-94).
   *
-  * Spark-first shape: the reference's hand-written combiner
-  * (invertedIndex.scala:68-76) is Catalyst's partial HashAggregate — the
-  * two-level groupBy below compiles to map-side partial aggregation followed
-  * by one shuffle on (term,title) and one on term. `sort_array` reproduces
+  * Spark-first shape: one aggregation level over postings, not occurrences.
+  * The reference's hand-written combiner (invertedIndex.scala:68-76) folds
+  * each document's occurrences into one `TermInfo(title, tf, offsets)`;
+  * here a shuffle on title gathers each title's lines (every line with that
+  * title, as the reference merges them), and one UDF call per title
+  * tokenizes them and emits one `(term, tf, ofs)` posting per term. The one
+  * `groupBy(term)` then assembles the postings, and `sort_array` reproduces
   * the secondary-sort title order without a custom partitioner/comparator.
+  * The title shuffle moves one row per document line, where a per-token
+  * plan would move one row per occurrence.
   *
-  * Scale notes (100 TB): both shuffles hash on the term, so skewed hot terms
-  * are the risk; the df cutoff bounds any single postings array, and AQE
-  * skew-join handling covers the candidate join in query. Occurrence lists
-  * per (term,doc) are bounded by document length.
+  * Scale notes (100 TB): the term shuffle is where skewed hot terms bite;
+  * the df cutoff bounds any single postings array that survives, and a
+  * posting per (term, title) is bounded by the title's text. A title's
+  * lines meet in one task, so a title with a pathological number of lines
+  * is the other skew risk.
   */
 object InvertedIndex {
 
@@ -42,38 +50,55 @@ object InvertedIndex {
       .select(col("t._1").as("term"), col("title"),
         col("line_offset").as("line_off"), col("t._2").cast("long").as("char_off"))
 
-  /** Level-1 aggregation: occurrences → one row per (term, title) with tf
-    * and document-ordered offsets — shared by [[build]] and [[merge]] so
-    * the posting shape cannot drift between the batch and incremental
-    * paths. */
-  private def postingsByDoc(occ: DataFrame): DataFrame =
-    occ.groupBy(col("term"), col("title"))
-      .agg(count(lit(1)).cast("int").as("tf"),
-        sort_array(collect_list(struct(col("line_off"), col("char_off")))).as("ofs"))
+  /** One title's postings, declared rather than inferred: a tuple UDF's
+    * inferred type would make `tf`, `ofs` and `line_off` nullable
+    * (IndexBuildSpec pins the schema). */
+  private val PostingsType = ArrayType(StructType(Seq(
+    StructField("term", StringType),
+    StructField("tf", IntegerType, nullable = false),
+    StructField("ofs", ArrayType(StructType(Seq(
+      StructField("line_off", LongType, nullable = false),
+      StructField("char_off", LongType))), containsNull = false), nullable = false))),
+    containsNull = false)
 
-  /** Full index build with the df cutoff.
-    *
-    * The cutoff is applied BEFORE postings assembly, not only after: df
-    * depends on distinct (term, doc) alone, so the `df < cutoff` filter
-    * commutes past the expensive aggregation. Stop-word-frequency terms
-    * are precisely the ones owning most occurrences (on the 50k-page
-    * bench corpus the dropped 25% of terms hold ~83% of the 12M
-    * occurrences), so the semi-join skips building exactly the giant
-    * postings arrays that would be thrown away. The distinct+count
-    * pre-pass is map-side-combined and cheap by comparison. */
-  def build(docs: DataFrame, dfCutoff: Int = DefaultDfCutoff): DataFrame = {
-    val occ = occurrences(docs)
-    val keep = occ.select(col("term"), col("title")).distinct()
-      .groupBy(col("term")).agg(count(lit(1)).as("df_pre"))
-      .filter(col("df_pre") < dfCutoff)
-      .select(col("term"))
-    postingsByDoc(occ.join(keep, Seq("term"), "left_semi"))
+  /** The combiner: all lines of one title, `(line_offset, body_off, body)`,
+    * → one `(term, tf, ofs)` per term. Offsets are sorted, not just
+    * concatenated: lines from two input files can share a line offset. */
+  private val titlePostingsUdf = udf(new UDF1[collection.Seq[Row], Seq[Row]] {
+    def call(lines: collection.Seq[Row]): Seq[Row] =
+      lines.flatMap { l =>
+        WikiCorpus.tokenize(l.getString(2), l.getInt(1)).map { case (term, c) =>
+          (term, l.getLong(0), c.toLong)
+        }
+      }.groupBy(_._1).iterator.map { case (term, occ) =>
+        Row(term, occ.size, occ.map(o => (o._2, o._3)).sorted.map(o => Row(o._1, o._2)))
+      }.toSeq
+  }, PostingsType)
+
+  /** docs → one row per (term, title) with tf and offsets — shared by
+    * [[build]] and [[merge]] so the posting shape cannot drift between the
+    * batch and incremental paths. */
+  private def postingsByDoc(docs: DataFrame): DataFrame =
+    docs.filter(col("body").isNotNull)
+      .groupBy(col("title"))
+      .agg(collect_list(struct(col("line_offset"), col("body_off"), col("body"))).as("lines"))
+      // plain explode: its element is NOT NULL, so p's fields keep their
+      // declared nullability; the argument is not an attribute, so no
+      // filter re-evaluating the UDF is inferred beneath it
+      .select(col("title"), explode(titlePostingsUdf(col("lines"))).as("p"))
+      .select(col("p.term").as("term"), col("title"), col("p.tf").as("tf"), col("p.ofs").as("ofs"))
+
+  /** Full index build with the df cutoff: postings → one `groupBy(term)`.
+    * The cut terms' postings are built and then dropped: a df pre-pass
+    * that skips them costs an aggregation over every posting, and measured
+    * slower at 4k and at 50k pages (ROADMAP item 1). */
+  def build(docs: DataFrame, dfCutoff: Int = DefaultDfCutoff): DataFrame =
+    postingsByDoc(docs)
       .groupBy(col("term"))
       .agg(sort_array(collect_list(struct(col("title"), col("tf"), col("ofs")))).as("postings"),
         count(lit(1)).cast("int").as("df"))
-      .filter(col("df") < dfCutoff) // belt-and-braces; pre-filter did the work
+      .filter(col("df") < dfCutoff)
       .select(col("term"), col("df"), col("postings"))
-  }
 
   /** Incremental maintenance: fold a delta corpus into an existing index
     * without rebuilding it — `merge(build(A, uncut), B, cutoff)` ==
@@ -99,9 +124,8 @@ object InvertedIndex {
     * of terms the delta actually touches are exploded and reassembled. */
   def merge(existing: DataFrame, deltaDocs: DataFrame,
       dfCutoff: Int = DefaultDfCutoff): DataFrame = {
-    val deltaPost = postingsByDoc(occurrences(deltaDocs))
-    // Pre-filter on the MERGED df before any postings are unnested — the
-    // same commute-the-cutoff move build makes with df_pre. Without it,
+    val deltaPost = postingsByDoc(deltaDocs)
+    // Pre-filter on the MERGED df before any postings are unnested. Without it,
     // the stop-word terms (which every realistic delta touches, and which
     // own most of an uncut index's bytes) would be exploded, shuffled and
     // re-collected only to be dropped by the final cutoff. Merged df is

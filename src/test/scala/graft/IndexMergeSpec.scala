@@ -10,6 +10,7 @@ import graft.index.InvertedIndex
   * rebuild: merge(build(A, uncut), B, cutoff) == build(A ∪ B, cutoff),
   * postings order, offsets and df included. */
 class IndexMergeSpec extends SparkSpec {
+  import IndexBuildSpec.canon
 
   val corpus = Seq(
     "<title>1</title> [[2]] [[4]] <text>alpha beta gamma</text>",
@@ -21,15 +22,6 @@ class IndexMergeSpec extends SparkSpec {
     Files.writeString(f, corpus.mkString("\n") + "\n")
     WikiCorpus.ingest(spark, f.toString).cache()
   }
-
-  private def canon(df: DataFrame) =
-    df.collect().map { r =>
-      (r.getString(0), r.getInt(1),
-        r.getSeq[org.apache.spark.sql.Row](2).map { p =>
-          (p.getString(0), p.getInt(1),
-            p.getSeq[org.apache.spark.sql.Row](2).map(o => (o.getLong(0), o.getLong(1))))
-        })
-    }.sortBy(_._1).toSeq
 
   test("merge(build(A), B) == build(A ∪ B), postings and offsets included") {
     val a = docs.filter(col("title") =!= "2")
@@ -48,6 +40,21 @@ class IndexMergeSpec extends SparkSpec {
     assert(!terms.contains("beta"), "beta reaches df=3 only after the merge")
     assert(terms.contains("gamma")) // df=2 < 3 survives
     assert(canon(merged) === canon(InvertedIndex.build(docs, dfCutoff = 3)))
+  }
+
+  test("a delta title on two lines merges into one posting per term") {
+    val f = Files.createTempFile("merge-dup", ".txt")
+    Files.writeString(f, (corpus ++ Seq(
+      "<title>5</title> [[1]] <text>beta zeta</text>",
+      "<title>5</title> <text>zeta alpha zeta</text>")).mkString("\n") + "\n")
+    val all = WikiCorpus.ingest(spark, f.toString)
+    val merged = InvertedIndex.merge(
+      InvertedIndex.build(all.filter(col("title") =!= "5"), dfCutoff = Int.MaxValue),
+      all.filter(col("title") === "5"))
+    val got = canon(merged)
+    val zeta = got.find(_._1 == "zeta").get
+    assert(zeta._2 === 1 && zeta._3.head._2 === 3, zeta)
+    assert(got === canon(InvertedIndex.build(all)))
   }
 
   test("empty delta is the identity (minus the cutoff re-application)") {
