@@ -17,8 +17,8 @@ import graft.functions.GraftFunctions
   * — and `SELECT cosine_sim(a.embedding, b.embedding)` works in plain
   * `spark.sql` / JDBC / notebook SQL with no code on the classpath's
   * caller side. The same expressions are also registrable imperatively
-  * via [[graft.functions.GraftFunctions.register]] (the catalog queries
-  * do that, since they receive an already-built session); both paths
+  * via [[graft.functions.GraftFunctions.register]] (which
+  * [[graft.Session.build]] calls on every session it returns); both paths
   * register the identical builders, so plans are indistinguishable.
   *
   * This is the SparkSessionExtensions surface from SURVEY §2.10's

@@ -22,14 +22,13 @@ object PlanDump {
 
   /** One representative per plan family: scan+agg, pushdown, broadcast
     * multiway, semi-join, search join tree, LSH band join, IVF partition
-    * pruning, decorrelated subqueries, value-range
-    * window, degree-ordered triangle join, broadcast kNN batch,
-    * incremental band probe, broadcast contamination probe. */
+    * pruning, decorrelated subqueries, value-range window, broadcast
+    * kNN batch, incremental band probe, broadcast contamination probe. */
   private val headline = Seq(
     "q01_pricing_summary", "q02_filter_project", "q04_multiway_join",
     "q05_semi_join", "q20_tfidf_search", "q32_minhash_lsh",
-    "q38_ann_srp_ivf", "q67_triangle_count",
-    "q68_exists_subquery", "q69_rolling_range", "q74_knn_join",
+    "q38_ann_srp_ivf", "q68_exists_subquery", "q69_rolling_range",
+    "q74_knn_join",
     "q76_dedup_incremental", "q77_contamination", "q86_cdc_upsert",
     "q87_zorder_layout", "q90_bloom_semi_join",
     "q108_cm_heavy_hitters", "q111_cdc_chunk_dedup", "q116_bpe_train2",
@@ -48,10 +47,9 @@ object PlanDump {
     // join-free PQ ADC lookup scan
     "q128_dsir_select", "q129_substring_spans", "q131_pq_adc",
     // r13 (ADVICE r12 #8): every query in a round top-5 cost list gets a
-    // pinned capture — two-hop expansion (q96), leakage-safe split over
-    // the 64-bit CC labeling (q104), buffer-family-split sketched profile
-    // (q140)
-    "q96_two_hop", "q104_split_leakage", "q140_profile_sketched",
+    // pinned capture — leakage-safe split over the 64-bit CC labeling
+    // (q104), buffer-family-split sketched profile (q140)
+    "q104_split_leakage", "q140_profile_sketched",
     // r13: two-phase recipe cumsum (no per-lang global sort), windowless
     // coverage curve, broadcast-probe attribution, buffer-family drift
     // profile, sketch-based overlap estimate
@@ -86,8 +84,6 @@ object PlanDump {
     // r15: winnowing's map-side fingerprint HOF + candidates-then-
     // intersect verify (q181)
     "q181_winnowing_overlap",
-    // r15: LPA's per-iteration double aggregate (count -> encoded max)
-    "q184_lpa_communities",
     // r16 (VERDICT r15 #3 — the six newest operators): k-anonymity's
     // QI-domain-bounded double agg (q182), the fixed-state CM join
     // sketch (q183), the 10-row broadcast threshold curve over q32's

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The one place the engine's SparkSession is configured. Every main (the
   * CLI, Bench, Verify, PlanDump, PlanExplain) and the spec harness build
-  * their session here, so the config below cannot drift between them. */
+  * their session here, so the config below cannot drift between them, and
+  * every one of them resolves graft's SQL functions (`cosine_sim`,
+  * `srp_cell`, `l2_sq`, `gram_hash60`). */
 object Session {
 
   /** A session on `local[cpus]` (or `SPARK_MASTER` when set) with one shuffle
@@ -24,6 +26,8 @@ object Session {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel(logLevel)
+    // idempotent: also covers a live session that getOrCreate handed back
+    graft.functions.GraftFunctions.register(s)
     s
   }
 }

@@ -112,8 +112,9 @@ case class CosineSim(left: Expression, right: Expression)
   override def prettyName: String = "cosine_sim"
 }
 
-/** Registration: idempotent per-session (used by the query catalog, which
-  * receives externally-created sessions). The config-only path is
+/** Registration: idempotent per-session. [[graft.Session.build]] calls it
+  * on every session it returns; a session built elsewhere calls it itself
+  * before running the catalog. The config-only path is
   * [[graft.GraftExtensions]] (`spark.sql.extensions=graft.GraftExtensions`);
   * both paths share the checked builders below. */
 object GraftFunctions {

@@ -117,36 +117,36 @@ object InvertedIndex {
     *    re-ingesting a document is an upsert, not a merge, and would need
     *    a delete pass first.
     *
-    * Scale notes (100 TB index, small delta): untouched terms pass
-    * through an ANTI join against the delta's term set — with a small
-    * delta that side broadcasts, so the overwhelming majority of the
-    * index is never unnested, regrouped, or even shuffled. Only postings
-    * of terms the delta actually touches are exploded and reassembled. */
+    * Because delta titles are new, a touched term's merged postings are
+    * its old postings plus the delta's, re-sorted by title: the delta is
+    * tokenized and aggregated per term once, and no existing posting is
+    * unnested.
+    *
+    * Scale notes (100 TB index, small delta): the per-term delta table
+    * joins the index twice, left-outer (every existing term) and anti
+    * (terms new to the index). Both joins read the one shuffle of the
+    * delta's postings, so its title UDF runs once per title
+    * (IndexMergeSpec pins a single Generate); AQE does not reuse a shuffle
+    * above a cached relation, so a cached delta is tokenized once per
+    * join. A small delta broadcasts, so the index is scanned but never
+    * shuffled, and only touched terms that pass the merged-df cutoff pay
+    * a concat and sort. */
   def merge(existing: DataFrame, deltaDocs: DataFrame,
       dfCutoff: Int = DefaultDfCutoff): DataFrame = {
-    val deltaPost = postingsByDoc(deltaDocs)
-    // Pre-filter on the MERGED df before any postings are unnested. Without it,
-    // the stop-word terms (which every realistic delta touches, and which
-    // own most of an uncut index's bytes) would be exploded, shuffled and
-    // re-collected only to be dropped by the final cutoff. Merged df is
-    // cheap: existing df + the delta's per-term distinct-title count
-    // (delta titles are new by contract, so the sum is exact).
-    val ddf = deltaPost.groupBy(col("term")).agg(count(lit(1)).as("ddf"))
-    val keep = ddf
-      .join(existing.select(col("term"), col("df")), Seq("term"), "left_outer")
-      .filter(coalesce(col("df"), lit(0)) + col("ddf") < dfCutoff)
-      .select(col("term"))
-    val untouched = existing.join(ddf, Seq("term"), "left_anti")
-      .filter(col("df") < dfCutoff)
-    val touched = existing.join(keep, Seq("term"), "left_semi")
-      .select(col("term"), explode(col("postings")).as("p"))
-      .select(col("term"), col("p.title").as("title"),
-        col("p.tf").as("tf"), col("p.ofs").as("ofs"))
-      .unionByName(deltaPost.join(keep, Seq("term"), "left_semi"))
+    // the left-outer join infers `term IS NOT NULL` on its delta side and
+    // the anti join does not; stating it keeps the two delta subplans
+    // equal, so they share one shuffle and the UDF runs once
+    val delta = postingsByDoc(deltaDocs)
+      .filter(col("term").isNotNull)
       .groupBy(col("term"))
-      .agg(sort_array(collect_list(struct(col("title"), col("tf"), col("ofs")))).as("postings"),
-        count(lit(1)).cast("int").as("df"))
-      .select(col("term"), col("df"), col("postings"))
-    untouched.unionByName(touched)
+      .agg(sort_array(collect_list(struct(col("title"), col("tf"), col("ofs")))).as("dpost"),
+        count(lit(1)).cast("int").as("ddf"))
+    val old = existing.join(delta, Seq("term"), "left_outer")
+      .select(col("term"), (col("df") + coalesce(col("ddf"), lit(0))).as("df"),
+        when(col("dpost").isNull, col("postings"))
+          .otherwise(sort_array(concat(col("postings"), col("dpost")))).as("postings"))
+    val added = delta.join(existing.select(col("term")), Seq("term"), "left_anti")
+      .select(col("term"), col("ddf").as("df"), col("dpost").as("postings"))
+    old.unionByName(added).filter(col("df") < dfCutoff)
   }
 }

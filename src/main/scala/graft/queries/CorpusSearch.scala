@@ -150,41 +150,6 @@ object CorpusSearch {
           WHERE x.iter IS NOT NULL)
         SELECT title, pr FROM pr WHERE iter = 10 ORDER BY title"""
 
-  /** q184's label-propagation core, extracted so q241 can score the SAME
-    * labeling it gates: from self-labels, `iters` rounds of
-    * most-frequent-neighbor-label with the deterministic (count,
-    * lowest-label) tiebreak packed into one max() key; per-round
-    * checkpoint, predecessor freed. Input is the directed-expanded
-    * (contact, target) row set; returns (v, label). The final state is
-    * released after its consumer's first action. */
-  private[graft] def lpaLabels(dedges: DataFrame, iters: Int): DataFrame = {
-    var state = dedges.select(col("target").as("v")).distinct()
-      .select(col("v"), col("v").as("label"))
-    var prev: DataFrame = null
-    for (_ <- 1 to iters) {
-      val step = dedges
-        .join(broadcast(state.withColumnRenamed("v", "contact")),
-          Seq("contact"))
-        .groupBy(col("target").as("v"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("v"))
-        .agg(max(col("cnt") * 1048576L + (lit(1048575L) - col("label")))
-          .as("key"))
-        .select(col("v"), (lit(1048575L) - col("key") % 1048576L).as("label"))
-        // per-round checkpoint is LOAD-BEARING here (r22 cadence A/B,
-        // VERDICT r21 #4): the state is consumed via a broadcast BUILD,
-        // so an un-checkpointed round re-executes the whole prior round
-        // inside that build — cadence-2 measured q184 6.54→8.35 s,
-        // q241 3.50→3.89 s at sf1/32c (OPTIMIZATION_r22.md)
-        .localCheckpoint()
-      if (prev != null) Scoped.free(prev)
-      prev = step
-      state = step
-    }
-    Scoped.releaseAfterUse(prev)
-    state
-  }
-
   val catalog: Seq[(String, Q, Option[String])] = Seq(
 
     // ---- flagship: tf-idf search over the document corpus (ref
@@ -352,195 +317,6 @@ object CorpusSearch {
                array_to_string(links, ',') AS links_csv, 1.0 AS pr
         FROM g ORDER BY title""")),
 
-    // ---- DOULION-sampled triangle count (Tsourakakis et al., KDD'09):
-    // keep each undirected edge iff a deterministic portable hash lands in
-    // 1/16 of its range (p = 1/16), count triangles EXACTLY on the sample,
-    // estimate the full count as n_tri / p^3 = n_tri * 4096. This is the
-    // 100 TB shape: the full key graph here is near-complete (~350k edges
-    // on 997 vertices at sf0.1 — an exact count enumerates ~10^8 wedges),
-    // and edge sampling is the standard way to bound that cost while
-    // keeping an unbiased estimator. The count itself uses the
-    // degree-ordered orientation (rank vertices by (degree, id), orient
-    // every edge low-rank -> high-rank): each triangle is counted exactly
-    // once and the wedge fan-out per vertex is bounded by its ORIENTED
-    // out-degree, O(sqrt(m)) — the node-iterator bound that makes the
-    // self-join survive skewed degree distributions.
-    ("q67_triangle_count",
-      (s: SparkSession, dir: String) => {
-        // deterministic 1/16 Bernoulli edge sample over the normalized
-        // undirected pair (portable md5 hash — the oracle applies the
-        // identical predicate); graph/Triangles does the degree-ordered
-        // oriented count, and 4096 = 16³ un-biases the estimate
-        val sampled = t(s, dir, "lineitem")
-          .select(least(col("l_orderkey") % 997, col("l_partkey") % 997).as("u"),
-            greatest(col("l_orderkey") % 997, col("l_partkey") % 997).as("v"))
-          .filter(col("u") =!= col("v"))
-          .filter(graft.core.Portable.hash32(
-            concat(lit("e"), col("u"), lit("_"), col("v"))) % 16 === 0)
-        graft.graph.Triangles.count(sampled)
-          .withColumn("est_triangles", col("n_tri") * 4096)
-      },
-      Some("""WITH re AS (
-          SELECT DISTINCT least(l_orderkey%997, l_partkey%997) AS u,
-                          greatest(l_orderkey%997, l_partkey%997) AS v
-          FROM lineitem WHERE l_orderkey%997 <> l_partkey%997),
-        se AS (SELECT u, v FROM re
-               WHERE ('0x' || substr(md5('e' || u || '_' || v), 1, 8))::BIGINT % 16 = 0),
-        deg AS (SELECT x AS vtx, COUNT(*) AS d FROM (
-                  SELECT u AS x FROM se UNION ALL SELECT v AS x FROM se) GROUP BY 1),
-        ordv AS (SELECT vtx, row_number() OVER (ORDER BY d, vtx) AS r FROM deg),
-        oe AS (SELECT least(ou.r, ov.r) AS lo, greatest(ou.r, ov.r) AS hi
-               FROM se JOIN ordv ou ON se.u = ou.vtx JOIN ordv ov ON se.v = ov.vtx),
-        tri AS (SELECT COUNT(*) AS n_tri
-                FROM oe e1 JOIN oe e2 ON e1.lo = e2.lo AND e1.hi < e2.hi
-                     JOIN oe e3 ON e3.lo = e1.hi AND e3.hi = e2.hi)
-        SELECT (SELECT COUNT(*) FROM deg) AS n_vertices,
-               (SELECT COUNT(*) FROM se) AS n_edges,
-               n_tri, n_tri * 4096 AS est_triangles FROM tri""")),
-
-    // ---- out-degree distribution of the built graph (dead links dropped,
-    // NULL sentinel included): the profiling pass that sizes PageRank's
-    // skew handling. Deliberately does NOT materialize adjacency arrays
-    // (GraphBuilder.build's collect_set) — degree is a countDistinct over
-    // the live edges, the dangling->['NULL'] wiring contributes degree 1
-    // via the outer-join coalesce, and the NULL sentinel row contributes
-    // degree = |titles| as a 1-row aggregate. Same result as profiling the
-    // built graph, at a fraction of the shuffle volume — the shape that
-    // matters when the adjacency payload is TBs but the histogram is KBs.
-    ("q73_degree_histogram",
-      (s: SparkSession, dir: String) => {
-        // degrees never leave the query as titles, so the whole pipeline
-        // runs on INTEGER vertex ids — long equality beats 'v123' string
-        // hashing in the semi-join and the distinct-count shuffle (same
-        // lesson as q96); the 'v'-prefix is a bijection, so semantics
-        // and the string-keyed oracle are unchanged
-        val raw = t(s, dir, "lineitem").select(
-          (col("l_orderkey") % 997).as("src"),
-          (col("l_partkey") % 1200).as("dst"))
-        val titles = raw.select(col("src").as("v")).distinct()
-          .localCheckpoint() // tiny; feeds the semi-join, outer join, count
-        val deg = raw
-          .join(titles.select(col("v").as("dst")), Seq("dst"), "left_semi")
-          .groupBy(col("src")).agg(countDistinct(col("dst")).as("deg"))
-        val out = titles
-          .join(deg, col("v") === col("src"), "left_outer")
-          .select(coalesce(col("deg"), lit(1L)).as("degree"))
-          .unionAll(titles.agg(count(lit(1)).as("degree")))
-          .groupBy(col("degree")).agg(count(lit(1)).as("n_pages"))
-          .orderBy(col("degree"))
-        Scoped.releaseAfterUse(titles)
-        out
-      },
-      Some("""WITH docs AS (
-          SELECT 'v' || CAST(l_orderkey % 997 AS VARCHAR) AS title,
-                 array_agg(DISTINCT 'v' || CAST(l_partkey % 1200 AS VARCHAR)) AS links
-          FROM lineitem GROUP BY 1),
-        titles AS (SELECT DISTINCT title FROM docs),
-        rawedges AS (SELECT title AS src, unnest(links) AS dst FROM docs),
-        edges AS (SELECT DISTINCT src, dst FROM rawedges
-                  WHERE dst IN (SELECT title FROM titles)),
-        adj AS (SELECT src AS title, list_sort(array_agg(dst)) AS links
-                FROM edges GROUP BY 1),
-        g AS (
-          SELECT t.title, COALESCE(a.links, ['NULL']) AS links
-          FROM titles t LEFT JOIN adj a ON t.title = a.title
-          UNION ALL
-          SELECT 'NULL' AS title,
-                 (SELECT list_sort(array_agg(title)) FROM titles) AS links)
-        SELECT CAST(len(links) AS BIGINT) AS degree, COUNT(*) AS n_pages
-        FROM g GROUP BY 1 ORDER BY degree""")),
-
-    // ---- degree ASSORTATIVITY + reciprocity (Newman 2002): does the
-    // link graph wire hubs to hubs (assortative, r > 0) or hubs to leaves
-    // (disassortative, r < 0), and how often is a directed edge
-    // reciprocated — the two structural coefficients a graph-shape audit
-    // reads next after q73's degree histogram (same edge semantics:
-    // distinct, dead-link-rejected). r is the Pearson correlation of
-    // (outdeg(src), indeg(dst)) over edges, computed from SIX exact
-    // BIGINT moments (the covariance-numerator trick: M·Σjk − Σj·Σk —
-    // partition order cannot move a bit) with ONE final IEEE
-    // division/sqrt onto the ‱ grid; reciprocity is an integer ratio.
-    // At fixture scales every moment fits BIGINT with headroom (max term
-    // M·Σj² ≈ 2e18 at sf1); a 100 TB run moves the final moment products
-    // to double after the same exact per-group folds.
-    //
-    // Scale: degrees are two shrinking combinable aggregates; the
-    // moments are ONE combinable fold over edges joined to two
-    // broadcast-able degree tables; reciprocity is a self-semi-join on
-    // the edge key (co-partitioned with edges) — nothing super-linear.
-    ("q222_degree_assortativity",
-      (s: SparkSession, dir: String) => {
-        val raw = t(s, dir, "lineitem").select(
-          (col("l_orderkey") % 997).as("src"),
-          (col("l_partkey") % 1200).as("dst"))
-        val titles = raw.select(col("src").as("v")).distinct().localCheckpoint()
-        val edges = raw
-          .join(titles.select(col("v").as("dst")), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst")).distinct().localCheckpoint()
-        val outd = edges.groupBy(col("src")).agg(count(lit(1)).as("j"))
-        val ind = edges.groupBy(col("dst")).agg(count(lit(1)).as("k"))
-        val rev = edges.select(col("dst").as("src"), col("src").as("dst"))
-        val mutual = edges.join(rev, Seq("src", "dst"), "left_semi")
-          .agg(count(lit(1)).as("mutual"))
-        val mo = edges.join(outd, Seq("src")).join(ind, Seq("dst"))
-          .agg(count(lit(1)).as("m_edges"),
-            sum(col("j")).as("sum_j"), sum(col("k")).as("sum_k"),
-            sum(col("j") * col("k")).as("sum_jk"),
-            sum(col("j") * col("j")).as("sum_j2"),
-            sum(col("k") * col("k")).as("sum_k2"))
-        val out = mo.crossJoin(mutual)
-          .select(col("m_edges"), col("sum_j"), col("sum_k"), col("sum_jk"),
-            col("sum_j2"), col("sum_k2"), col("mutual"),
-            // a regular graph (zero degree variance) zeroes a sqrt factor
-            // and an empty edge set zeroes m_edges — both would NaN/÷0
-            // with Spark-silent-0 vs DuckDB-error asymmetry; short-circuit
-            // to the same -1 sentinel in both engines (ADVICE r18).
-            when((col("m_edges") * col("sum_j2")
-                  - col("sum_j") * col("sum_j")) <= 0L
-                || (col("m_edges") * col("sum_k2")
-                  - col("sum_k") * col("sum_k")) <= 0L, lit(-1L))
-              .otherwise(
-                floor((col("m_edges") * col("sum_jk") - col("sum_j") * col("sum_k"))
-                    .cast("double")
-                  / sqrt((col("m_edges") * col("sum_j2") - col("sum_j") * col("sum_j"))
-                      .cast("double")
-                    * (col("m_edges") * col("sum_k2") - col("sum_k") * col("sum_k"))
-                      .cast("double")) * lit(1e4) + lit(0.5))
-                  .cast("long")).as("assort4"),
-            when(col("m_edges") === 0L, lit(-1L))
-              .otherwise(expr("mutual * 10000 div m_edges")).as("recip4"))
-        Scoped.releaseAfterUse(titles, edges)
-        out
-      },
-      Some("""WITH raw AS (SELECT l_orderkey % 997 AS src,
-            l_partkey % 1200 AS dst FROM lineitem),
-        titles AS (SELECT DISTINCT src AS v FROM raw),
-        edges AS (SELECT DISTINCT src, dst FROM raw
-          WHERE dst IN (SELECT v FROM titles)),
-        outd AS (SELECT src, COUNT(*) AS j FROM edges GROUP BY src),
-        ind AS (SELECT dst, COUNT(*) AS k FROM edges GROUP BY dst),
-        ej AS (SELECT e.src, e.dst, o.j, i.k FROM edges e
-          JOIN outd o ON o.src = e.src JOIN ind i ON i.dst = e.dst),
-        mo AS (SELECT COUNT(*) AS m_edges,
-            CAST(SUM(j) AS BIGINT) AS sum_j, CAST(SUM(k) AS BIGINT) AS sum_k,
-            CAST(SUM(j * k) AS BIGINT) AS sum_jk,
-            CAST(SUM(j * j) AS BIGINT) AS sum_j2,
-            CAST(SUM(k * k) AS BIGINT) AS sum_k2
-          FROM ej),
-        mu AS (SELECT COUNT(*) AS mutual FROM edges e
-          WHERE EXISTS (SELECT 1 FROM edges r
-            WHERE r.src = e.dst AND r.dst = e.src))
-        SELECT m_edges, sum_j, sum_k, sum_jk, sum_j2, sum_k2, mutual,
-          CASE WHEN m_edges * sum_j2 - sum_j * sum_j <= 0
-                 OR m_edges * sum_k2 - sum_k * sum_k <= 0 THEN -1
-            ELSE CAST(floor(CAST(m_edges * sum_jk - sum_j * sum_k AS DOUBLE)
-              / sqrt(CAST(m_edges * sum_j2 - sum_j * sum_j AS DOUBLE)
-                * CAST(m_edges * sum_k2 - sum_k * sum_k AS DOUBLE))
-              * 1e4 + 0.5) AS BIGINT) END AS assort4,
-          CASE WHEN m_edges = 0 THEN -1
-            ELSE mutual * 10000 // m_edges END AS recip4
-        FROM mo, mu""")),
-
     // ---- hash-checked iterative PageRank: the production loop
     // (PageRank.run, the one RankPages runs) for exactly 10 power
     // iterations (the reference's minimum, which is also where this graph
@@ -563,8 +339,8 @@ object CorpusSearch {
 
     // ---- incremental index maintenance (InvertedIndex.merge): an
     // existing index built from 80% of the corpus absorbs the other 20%
-    // as a delta — untouched terms anti-join past, only delta terms are
-    // reassembled — and the result must hash-match a FULL-REBUILD oracle.
+    // as a delta — untouched terms pass through, touched terms append the
+    // delta's postings — and the result must hash-match a FULL-REBUILD oracle.
     // This is the gate that proves incremental == batch.
     ("q59_index_merge",
       (s: SparkSession, dir: String) => {
@@ -574,9 +350,9 @@ object CorpusSearch {
             lit(0L).as("line_offset"), lit(0).as("body_off"),
             col("text").as("body"))
         // Checkpoint the uncut index: merge's plan references `existing`
-        // three times (untouched / touched / merged-df pre-filter) and the
+        // twice (the left-outer join and the new-term anti join) and the
         // production shape is a parquet TABLE, not a lazy build — without
-        // materialization the gate would run the expensive build thrice.
+        // materialization the gate would run the expensive build twice.
         // Released when the caller's terminal action completes.
         val existing = graft.index.InvertedIndex.build(
           wikiShape(base.filter(col("doc_id") % 5 =!= 0)), dfCutoff = Int.MaxValue)
@@ -619,221 +395,6 @@ object CorpusSearch {
         SELECT title, ROUND(pr, 6) AS pr, CAST($it AS BIGINT) AS iterations
         FROM pr WHERE iter = $it ORDER BY title"""
       }),
-
-    // ---- RICH-CLUB coefficient (Zhou & Mondragón 2004): for degree
-    // thresholds k ∈ {1,2,4,8,16}, the edge density φ(k) among vertices
-    // of degree > k — "do the hubs wire to each other?", the
-    // whole-distribution sibling of q222's single assortativity number
-    // (r can be ~0 while the top decile is a near-clique; φ(k) sees it).
-    // All INTEGER: n_k and e_k are conditional counts, φ4 =
-    // 2·e_k·10⁴ div (n_k·(n_k−1)) with the n_k ≤ 1 degenerate case
-    // short-circuited to -1 identically in both engines.
-    //
-    // Scale: degree is one combinable count; the threshold table is 5
-    // literal rows cross-joined to BOUNDED relations (deg: |V| rows,
-    // edges + both endpoint degrees: |E| rows, broadcast degree lookups)
-    // — nothing super-linear, corpus touched once through the edge build.
-    ("q232_rich_club",
-      (s: SparkSession, dir: String) => {
-        import s.implicits._
-        val raw = t(s, dir, "lineitem").select(
-          (col("l_orderkey") % 997).as("a"), (col("l_partkey") % 1200).as("b"))
-          .filter(col("a") =!= col("b"))
-        val und = raw.select(least(col("a"), col("b")).as("w1"),
-          greatest(col("a"), col("b")).as("w2")).distinct()
-          .localCheckpoint()
-        val deg = und.select(col("w1").as("v"))
-          .unionByName(und.select(col("w2").as("v")))
-          .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-          .localCheckpoint()
-        val ks = Seq(1L, 2L, 4L, 8L, 16L).toDF("k")
-        val nk = ks.crossJoin(deg).filter(col("deg") > col("k"))
-          .groupBy(col("k")).agg(count(lit(1)).as("n_k"))
-        val dund = und
-          .join(broadcast(deg.select(col("v").as("w1"), col("deg").as("d1"))),
-            Seq("w1"))
-          .join(broadcast(deg.select(col("v").as("w2"), col("deg").as("d2"))),
-            Seq("w2"))
-        val ek = ks.crossJoin(dund)
-          .filter(col("d1") > col("k") && col("d2") > col("k"))
-          .groupBy(col("k")).agg(count(lit(1)).as("e_k"))
-        val out = ks.join(nk, Seq("k"), "left_outer")
-          .join(ek, Seq("k"), "left_outer")
-          .select(col("k"), coalesce(col("n_k"), lit(0L)).as("n_k"),
-            coalesce(col("e_k"), lit(0L)).as("e_k"))
-          .select(col("k"), col("n_k"), col("e_k"),
-            when(col("n_k") <= 1L, lit(-1L))
-              .otherwise(expr("2 * e_k * 10000 div (n_k * (n_k - 1))"))
-              .as("phi4"))
-          .orderBy(col("k"))
-        Scoped.releaseAfterUse(und, deg)
-        out
-      },
-      Some("""WITH raw AS (
-          SELECT l_orderkey % 997 AS a, l_partkey % 1200 AS b
-          FROM lineitem WHERE l_orderkey % 997 <> l_partkey % 1200),
-        und AS (SELECT DISTINCT least(a, b) AS w1, greatest(a, b) AS w2
-          FROM raw),
-        deg AS (SELECT v, COUNT(*) AS deg FROM (
-            SELECT w1 AS v FROM und UNION ALL SELECT w2 AS v FROM und)
-          GROUP BY v),
-        ks AS (SELECT unnest([1, 2, 4, 8, 16]) AS k),
-        nk AS (SELECT k, COUNT(*) AS n_k FROM ks JOIN deg ON deg.deg > ks.k
-          GROUP BY k),
-        ek AS (SELECT k, COUNT(*) AS e_k
-          FROM ks JOIN und ON TRUE
-          JOIN deg a1 ON a1.v = und.w1 JOIN deg a2 ON a2.v = und.w2
-          WHERE a1.deg > ks.k AND a2.deg > ks.k
-          GROUP BY k)
-        SELECT CAST(ks.k AS BIGINT) AS k,
-          COALESCE(nk.n_k, 0) AS n_k, COALESCE(ek.e_k, 0) AS e_k,
-          CASE WHEN COALESCE(nk.n_k, 0) <= 1 THEN -1
-            ELSE 2 * COALESCE(ek.e_k, 0) * 10000
-              // (nk.n_k * (nk.n_k - 1)) END AS phi4
-        FROM ks LEFT JOIN nk ON nk.k = ks.k LEFT JOIN ek ON ek.k = ks.k
-        ORDER BY k""")),
-
-    // ---- LOCAL clustering coefficient (Watts & Strogatz 1998): per
-    // vertex, what fraction of its neighbor pairs are themselves
-    // connected — C(v) = 2·T(v) / (d(v)·(d(v)−1)) — the micro-scale
-    // cohesion profile that complements q67's global triangle estimate
-    // and q224's k-truss (same sampled graph, so the three statistics
-    // describe ONE object). T(v) counts closed wedges centered at v:
-    // wedge pairs (u < w) from v's adjacency, closed iff (u, w) is a
-    // surviving edge — a semi-join against the canonical edge set, each
-    // incident triangle counted exactly once per center. All INTEGER;
-    // c4 = 2·T·10⁴ div (d·(d−1)) with d ≤ 1 short-circuited to -1 in
-    // both engines (degree-1 vertices have no wedge to close).
-    //
-    // Scale: rides q67's deterministic 1/16 md5-Bernoulli edge sample —
-    // the documented bound that keeps Σ deg² wedge volume affordable on
-    // the near-complete key graph (q224's argument); the wedge build is
-    // one self-join of the sampled adjacency + one semi-join, both
-    // co-partitioned, state |V| rows.
-    ("q233_clustering_coeff",
-      (s: SparkSession, dir: String) => {
-        val se = t(s, dir, "lineitem")
-          .select(least(col("l_orderkey") % 997, col("l_partkey") % 997).as("u"),
-            greatest(col("l_orderkey") % 997, col("l_partkey") % 997).as("v"))
-          .filter(col("u") =!= col("v"))
-          .filter(graft.core.Portable.hash32(
-            concat(lit("e"), col("u"), lit("_"), col("v"))) % 16 === 0)
-          .distinct()
-          .localCheckpoint()
-        val edges = se.select(col("u").as("src"), col("v").as("dst"))
-          .unionByName(se.select(col("v").as("src"), col("u").as("dst")))
-        val deg = edges.groupBy(col("src").as("v0"))
-          .agg(count(lit(1)).as("deg"))
-        val wedges = edges.as("e1")
-          .join(edges.as("e2"),
-            col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))
-          .select(col("e1.src").as("ctr"), col("e1.dst").as("u"),
-            col("e2.dst").as("w"))
-        val closed = wedges
-          .join(se.select(col("u"), col("v").as("w")), Seq("u", "w"),
-            "left_semi")
-          .groupBy(col("ctr")).agg(count(lit(1)).as("t"))
-        val out = deg
-          .join(closed, col("v0") === col("ctr"), "left_outer")
-          .select(col("v0").as("v"), col("deg"),
-            coalesce(col("t"), lit(0L)).as("tri"))
-          .select(col("v"), col("deg"), col("tri"),
-            when(col("deg") <= 1L, lit(-1L))
-              .otherwise(expr("2 * tri * 10000 div (deg * (deg - 1))"))
-              .as("c4"))
-          .orderBy(col("v"))
-        Scoped.releaseAfterUse(se)
-        out
-      },
-      Some("""WITH re AS (
-          SELECT DISTINCT least(l_orderkey%997, l_partkey%997) AS u,
-                          greatest(l_orderkey%997, l_partkey%997) AS v
-          FROM lineitem WHERE l_orderkey%997 <> l_partkey%997),
-        se AS (SELECT u, v FROM re
-          WHERE ('0x' || substr(md5('e' || u || '_' || v), 1, 8))::BIGINT
-            % 16 = 0),
-        edges AS (SELECT u AS src, v AS dst FROM se
-          UNION ALL SELECT v AS src, u AS dst FROM se),
-        deg AS (SELECT src AS v, COUNT(*) AS deg FROM edges GROUP BY src),
-        wedges AS (SELECT e1.src AS ctr, e1.dst AS u, e2.dst AS w
-          FROM edges e1 JOIN edges e2
-            ON e1.src = e2.src AND e1.dst < e2.dst),
-        closed AS (SELECT ctr, COUNT(*) AS t FROM wedges
-          WHERE EXISTS (SELECT 1 FROM se
-            WHERE se.u = wedges.u AND se.v = wedges.w)
-          GROUP BY ctr),
-        j AS (SELECT deg.v, deg.deg, COALESCE(closed.t, 0) AS tri
-          FROM deg LEFT JOIN closed ON closed.ctr = deg.v)
-        SELECT v, deg, tri,
-          CASE WHEN deg <= 1 THEN -1
-            ELSE 2 * tri * 10000 // (deg * (deg - 1)) END AS c4
-        FROM j ORDER BY v""")),
-
-    // ---- two-hop neighborhood expansion from a PROBE SET: |N1| and
-    // |N≤2 \ {self}| per probe page — the friends-of-friends / related-
-    // pages shape. The scale discipline is the probe restriction: a full
-    // two-hop self-join of a web graph explodes on hub vertices (Σ d(v)²),
-    // so the operator expands only from the (broadcast) probe set — hop 1
-    // touches probe-incident edges, hop 2 joins those midpoints back to
-    // the edge table hashed on src. On a real cluster add a hub cap
-    // (degree-truncate midpoints) to bound the worst key; the md5-derived
-    // probe (~5% of pages) makes the oracle's set identical.
-    ("q96_two_hop",
-      (s: SparkSession, dir: String) => {
-        // the expansion runs on INTEGER vertex ids — the hop joins and
-        // dedups touch millions of rows, and long equality beats string
-        // ('v123') hashing/compares throughout the hot path; the 'v'-
-        // prefixed titles are rebuilt only on the ~1k-row probe filter
-        // (md5 parity with the oracle) and the final output
-        val rawE = t(s, dir, "lineitem").select(
-          (col("l_orderkey") % 997).as("src"),
-          (col("l_partkey") % 1200).as("dst"))
-        val titles = rawE.select(col("src").as("v")).distinct()
-          .localCheckpoint()
-        val edges = rawE
-          .join(titles.select(col("v").as("dst")), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst")).distinct()
-          .localCheckpoint() // consumed by BOTH hop joins
-        val probe = titles
-          .filter(graft.core.Portable.hash32(concat(lit("v"), col("v"))) % 20 === 0)
-          .select(col("v").as("p"))
-        val h1 = edges.join(broadcast(probe), col("src") === col("p"))
-          .select(col("p"), col("dst"))
-        val h2 = h1.select(col("p"), col("dst").as("src"))
-          .join(edges, Seq("src")).select(col("p"), col("dst"))
-        val reach = h1.unionByName(h2).filter(col("dst") =!= col("p")).distinct()
-        // h1 is already duplicate-free: distinct edges inner-joined to
-        // distinct probe values — count directly, no dedup exchange
-        val n1 = h1.filter(col("dst") =!= col("p"))
-          .groupBy(col("p")).agg(count(lit(1)).as("n_1hop"))
-        val out = reach.groupBy(col("p")).agg(count(lit(1)).as("n_2hop"))
-          .join(n1, Seq("p"), "left_outer")
-          .select(concat(lit("v"), col("p")).as("title"),
-            coalesce(col("n_1hop"), lit(0L)).as("n_1hop"), col("n_2hop"))
-          .orderBy(col("title"))
-        Scoped.releaseAfterUse(titles, edges)
-        out
-      },
-      Some("""WITH rawe AS (SELECT DISTINCT
-            'v' || CAST(l_orderkey % 997 AS VARCHAR) AS src,
-            'v' || CAST(l_partkey % 1200 AS VARCHAR) AS dst
-          FROM lineitem),
-        titles AS (SELECT DISTINCT src AS title FROM rawe),
-        edges AS (SELECT src, dst FROM rawe
-                  WHERE dst IN (SELECT title FROM titles)),
-        probe AS (SELECT title AS p FROM titles
-                  WHERE ('0x' || substr(md5(title), 1, 8))::BIGINT % 20 = 0),
-        h1 AS (SELECT p, dst FROM probe JOIN edges ON src = p),
-        h2 AS (SELECT h1.p, e.dst FROM h1 JOIN edges e ON e.src = h1.dst),
-        reach AS (SELECT DISTINCT p, dst FROM
-            (SELECT p, dst FROM h1 UNION ALL SELECT p, dst FROM h2)
-          WHERE dst <> p),
-        n1 AS (SELECT p, COUNT(DISTINCT dst) AS n_1hop FROM h1
-               WHERE dst <> p GROUP BY 1),
-        n2 AS (SELECT p, COUNT(*) AS n_2hop FROM reach GROUP BY 1)
-        SELECT n2.p AS title, COALESCE(n1.n_1hop, 0) AS n_1hop, n2.n_2hop
-        FROM n2 LEFT JOIN n1 ON n1.p = n2.p
-        ORDER BY title""")),
 
     // ---- HYBRID retrieval: reciprocal-rank fusion of the lexical (BM25,
     // q80's formula, probe term "spark") and vector (cosine to vec 0's
@@ -1142,383 +703,6 @@ object CorpusSearch {
         ORDER BY pmi6 DESC, a, b LIMIT 20"""))
   ,
 
-    // ---- LABEL PROPAGATION community detection (Raghavan/Albert/Kumara
-    // 2007) on the undirected key graph: label_0(v) = v; each iteration
-    // every vertex adopts the most frequent label among its neighbors,
-    // ties to the SMALLEST label; 5 synchronous iterations (synchronous
-    // LPA can oscillate, so the fixed-depth output is the deterministic
-    // contract — same policy as q29's fixed 10). Near-linear community
-    // detection — the coarse-graining complement to exact components
-    // (q49): CC merges anything connected, LPA splits a connected graph
-    // into densely-linked regions.
-    //
-    // Determinism across engines is ENCODED, not hoped for: the per-
-    // vertex argmax runs as one plain MAX over
-    // cnt·2²⁰ + (2²⁰−1 − label) — max count wins, then min label —
-    // exact 64-bit integer ops in both engines (labels are vertex ids
-    // < 2²⁰ here; a cluster run widens the packing or uses a struct
-    // max). Oracle: recursive CTE over the same doubled-edge table, one
-    // state reference per step.
-    //
-    // Scale: per iteration ONE join (the |V|-row state broadcasts at
-    // bench scale, so the join is map-side) + a (target,label)-keyed
-    // combinable count + a target-keyed MAX — all partial-aggregated;
-    // state is |V| rows.
-    ("q184_lpa_communities",
-      (s: SparkSession, dir: String) => {
-        val edges = t(s, dir, "lineitem").select(
-          (col("l_orderkey") % 997).as("src"),
-          (col("l_partkey") % 1200).as("dst")).distinct()
-        val dedges = edges
-          .select(col("src").as("contact"), col("dst").as("target"))
-          .unionByName(edges.select(col("dst").as("contact"),
-            col("src").as("target")))
-          .localCheckpoint()
-        val state = lpaLabels(dedges, 5)
-        val sizes = state.groupBy(col("label")).agg(count(lit(1)).as("comm_size"))
-        Scoped.releaseAfterUse(dedges)
-        state.join(broadcast(sizes), Seq("label"))
-          .select(concat(lit("v"), col("v")).as("title"),
-            col("label").as("community"), col("comm_size"))
-          .orderBy(col("title"))
-      },
-      Some("""WITH RECURSIVE edges AS (
-          SELECT DISTINCT l_orderkey % 997 AS src, l_partkey % 1200 AS dst
-          FROM lineitem),
-        dedges AS (
-          SELECT src AS contact, dst AS target FROM edges
-          UNION ALL
-          SELECT dst AS contact, src AS target FROM edges),
-        verts AS (SELECT DISTINCT target AS v FROM dedges),
-        state AS (
-          SELECT 0 AS iter, v, v AS label FROM verts
-          UNION ALL
-          SELECT iter, v, 1048575 - key % 1048576 AS label
-          FROM (
-            SELECT iter, v, MAX(cnt * 1048576 + (1048575 - label)) AS key
-            FROM (
-              SELECT p.iter + 1 AS iter, e.target AS v, p.label,
-                COUNT(*) AS cnt
-              FROM state p JOIN dedges e ON p.v = e.contact
-              WHERE p.iter < 5
-              GROUP BY 1, 2, 3) c
-            GROUP BY 1, 2) m),
-        fin AS (SELECT v, label FROM state WHERE iter = 5),
-        sz AS (SELECT label, COUNT(*) AS comm_size FROM fin GROUP BY label)
-        SELECT 'v' || CAST(f.v AS VARCHAR) AS title, f.label AS community,
-          sz.comm_size
-        FROM fin f JOIN sz ON sz.label = f.label
-        ORDER BY title""")),
-
-    // ---- COMMUNITY QUALITY: Newman–Girvan modularity + per-community
-    // conductance OF q184's OWN labeling — the operator-evaluating-
-    // operator pattern (q118 scores the ANN index, q114 the LSH recall;
-    // this scores the community detector): Q says whether the labels
-    // beat chance, φ_c names which communities leak. The labeling is
-    // the SAME extracted lpaLabels walk q184 gates (5 rounds, identical
-    // tiebreak), so the score can never drift from the gated operator.
-    // Everything is exact: over the directed-expanded row set
-    // (M = 2m rows), Q = Σ_c (in_c·M − d_c²) / M² with the numerator a
-    // BIGINT fold (|num| ≤ M² ≤ 5.8e12 at sf1 — double-exact), the ONE
-    // division done on doubles identically in both engines (num·10⁶
-    // would overflow BIGINT headroom at sf1; num/M² stays exact-input
-    // IEEE); conductance cut_c div min(d_c, M−d_c) is a nonnegative
-    // integer ratio (no floor-direction hazard), min = 0 short-circuits
-    // to −1 both engines. Oracle: q184's recursive LPA CTE verbatim +
-    // the same integer folds.
-    //
-    // Scale: labels are a |V|-row broadcast against the edge rows; the
-    // folds are one combinable pass each; M² arithmetic moves to double
-    // after the exact per-community sums at 100 TB (q222's note).
-    ("q241_community_quality",
-      (s: SparkSession, dir: String) => {
-        // q67's deterministic 1/16-sampled undirected key graph (the
-        // q233/q224 object): the UNSAMPLED key graph is near-complete and
-        // LPA collapses it to ONE community (Q = 0 identically — a
-        // vacuous gate); the sampled graph fragments into real structure,
-        // so modularity and conductance discriminate
-        val edges = t(s, dir, "lineitem")
-          .select(least(col("l_orderkey") % 997, col("l_partkey") % 997).as("src"),
-            greatest(col("l_orderkey") % 997, col("l_partkey") % 997).as("dst"))
-          .filter(col("src") =!= col("dst"))
-          .filter(graft.core.Portable.hash32(
-            concat(lit("e"), col("src"), lit("_"), col("dst"))) % 16 === 0)
-          .distinct()
-        val dedges = edges
-          .select(col("src").as("contact"), col("dst").as("target"))
-          .unionByName(edges.select(col("dst").as("contact"),
-            col("src").as("target")))
-          .localCheckpoint()
-        val labels = lpaLabels(dedges, 5)
-        val m2 = dedges.count() // M = 2m, a 1-value driver pull (I3)
-        Scoped.releaseAfterUse(dedges)
-        val le = dedges
-          .join(broadcast(labels.select(col("v").as("contact"),
-            col("label").as("lc"))), Seq("contact"))
-          .join(broadcast(labels.select(col("v").as("target"),
-            col("label").as("lt"))), Seq("target"))
-        val perC = le.groupBy(col("lc").as("community"))
-          .agg(count(lit(1)).as("d_c"),
-            sum(when(col("lc") === col("lt"), 1L).otherwise(0L)).as("in_c"))
-          .join(broadcast(labels.groupBy(col("label").as("community"))
-            .agg(count(lit(1)).as("n_v"))), Seq("community"))
-        val qnum = perC
-          .agg(sum(col("in_c") * lit(m2) - col("d_c") * col("d_c")).as("num"))
-          .select((floor(col("num").cast("double")
-            / lit((m2 * m2).toDouble) * 1e6 + 0.5)).cast("long").as("q6"))
-        perC.crossJoin(broadcast(qnum))
-          .select(col("community"), col("n_v"), col("d_c"), col("in_c"),
-            (col("d_c") - col("in_c")).as("cut_c"),
-            when(least(col("d_c"), lit(m2) - col("d_c")) === 0L, lit(-1L))
-              .otherwise(expr(s"(d_c - in_c) * 10000 div " +
-                s"least(d_c, ${m2} - d_c)")).as("phi4"),
-            col("q6"))
-          .orderBy(col("community"))
-      },
-      Some("""WITH RECURSIVE re AS (
-          SELECT DISTINCT least(l_orderkey%997, l_partkey%997) AS src,
-                          greatest(l_orderkey%997, l_partkey%997) AS dst
-          FROM lineitem WHERE l_orderkey%997 <> l_partkey%997),
-        edges AS (SELECT src, dst FROM re
-          WHERE ('0x' || substr(md5('e' || src || '_' || dst), 1, 8))::BIGINT
-            % 16 = 0),
-        dedges AS (
-          SELECT src AS contact, dst AS target FROM edges
-          UNION ALL
-          SELECT dst AS contact, src AS target FROM edges),
-        verts AS (SELECT DISTINCT target AS v FROM dedges),
-        state AS (
-          SELECT 0 AS iter, v, v AS label FROM verts
-          UNION ALL
-          SELECT iter, v, 1048575 - key % 1048576 AS label
-          FROM (
-            SELECT iter, v, MAX(cnt * 1048576 + (1048575 - label)) AS key
-            FROM (
-              SELECT p.iter + 1 AS iter, e.target AS v, p.label,
-                COUNT(*) AS cnt
-              FROM state p JOIN dedges e ON p.v = e.contact
-              WHERE p.iter < 5
-              GROUP BY 1, 2, 3) c
-            GROUP BY 1, 2) m),
-        fin AS MATERIALIZED (SELECT v, label FROM state WHERE iter = 5),
-        mm AS (SELECT COUNT(*) AS m2 FROM dedges),
-        le AS MATERIALIZED (SELECT lc.label AS lc, lt.label AS lt
-          FROM dedges d
-          JOIN fin lc ON lc.v = d.contact
-          JOIN fin lt ON lt.v = d.target),
-        perc AS (SELECT le.lc AS community,
-            COUNT(*) AS d_c,
-            CAST(SUM(CASE WHEN le.lc = le.lt THEN 1 ELSE 0 END) AS BIGINT)
-              AS in_c
-          FROM le GROUP BY 1),
-        sz AS (SELECT label AS community, COUNT(*) AS n_v
-          FROM fin GROUP BY 1),
-        qn AS (SELECT CAST(floor(
-            CAST(SUM(in_c * mm.m2 - d_c * d_c) AS DOUBLE)
-            / CAST(mm.m2 * mm.m2 AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS q6
-          FROM perc CROSS JOIN mm GROUP BY mm.m2)
-        SELECT perc.community, sz.n_v, perc.d_c, perc.in_c,
-          perc.d_c - perc.in_c AS cut_c,
-          CASE WHEN least(perc.d_c, mm.m2 - perc.d_c) = 0 THEN -1
-            ELSE (perc.d_c - perc.in_c) * 10000
-              // least(perc.d_c, mm.m2 - perc.d_c) END AS phi4,
-          qn.q6
-        FROM perc JOIN sz ON sz.community = perc.community
-        CROSS JOIN mm CROSS JOIN qn
-        ORDER BY perc.community""")),
-
-    // ---- k-TRUSS peel (Cohen 2008): the EDGE-based sibling of q189's
-    // vertex k-core — keep an edge only while it closes ≥ k−2 = 2
-    // triangles with surviving edges, iterating to the fixed point. A
-    // 4-truss is the standard cohesive-subgraph certificate (every
-    // edge in it has two common-neighbor witnesses), one notch
-    // stronger than core number. Rides q67's deterministic 1/16
-    // md5-Bernoulli edge sample (the documented scale bound for the
-    // dense key graph — the oracle applies the identical predicate).
-    // Per round: support = one wedge join (edges fanned by undirected
-    // adjacency, combinable count per edge), then an inner join keeps
-    // edges at support ≥ 2 — an edge with NO wedge is absent from the
-    // support table and drops, as it must. Fixed-point rounds are
-    // filled driver-side exactly like q189 (the oracle unrolls all 4
-    // rounds as MATERIALIZED CTEs; at a fixed point the values are
-    // equal by definition).
-    //
-    // Scale: wedge volume is Σ_b deg(b)² over the SAMPLED graph — the
-    // sample is what bounds it (q67's argument); each round's state is
-    // the shrinking edge set, checkpointed, predecessor freed.
-    ("q224_ktruss_peel",
-      (s: SparkSession, dir: String) => {
-        import s.implicits._
-        val rounds = 4
-        var edges = t(s, dir, "lineitem").select(
-          least(col("l_orderkey") % 997, col("l_partkey") % 997).as("u"),
-          greatest(col("l_orderkey") % 997, col("l_partkey") % 997).as("w"))
-          .filter(col("u") =!= col("w")).distinct()
-          .filter(graft.core.Portable.hash32(
-            concat(lit("e"), col("u"), lit("_"), col("w"))) % 16 === 0)
-          .localCheckpoint()
-        var prev = edges
-        val curve = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-        var before = edges.count()
-        var r = 1
-        while (r <= rounds && (curve.isEmpty || curve.last._3 > 0L)) {
-          val und = edges.select(col("u").as("a"), col("w").as("b"))
-            .unionByName(edges.select(col("w").as("a"), col("u").as("b")))
-          val sup = edges
-            .join(und.select(col("a").as("u"), col("b")), Seq("u"))
-            .join(und.select(col("a").as("w"), col("b")), Seq("w", "b"))
-            .groupBy(col("u"), col("w")).agg(count(lit(1)).as("sup"))
-          val next = edges.join(sup.filter(col("sup") >= 2)
-              .select(col("u"), col("w")), Seq("u", "w"), "left_semi")
-            .localCheckpoint()
-          Scoped.free(prev)
-          prev = next
-          edges = next
-          val kept = next.count()
-          curve += ((r.toLong, kept, before - kept))
-          before = kept
-          r += 1
-        }
-        Scoped.free(prev)
-        val fp = curve.last
-        while (curve.length < rounds)
-          curve += ((curve.length + 1L, fp._2, 0L))
-        curve.toSeq.toDF("round", "n_edges", "n_removed")
-          .orderBy(col("round"))
-      },
-      Some {
-        val peels = (1 to 4).map { r =>
-          val (p, c) = (s"t${r - 1}", s"t$r")
-          s"""u$r AS MATERIALIZED (SELECT u AS a, w AS b FROM $p
-               UNION ALL SELECT w AS a, u AS b FROM $p),
-             s$r AS MATERIALIZED (SELECT e.u, e.w, COUNT(*) AS sup
-               FROM $p e JOIN u$r x ON x.a = e.u
-               JOIN u$r y ON y.a = e.w AND y.b = x.b
-               GROUP BY e.u, e.w),
-             $c AS MATERIALIZED (SELECT e.u, e.w FROM $p e
-               JOIN s$r ON s$r.u = e.u AND s$r.w = e.w AND s$r.sup >= 2)"""
-        }.mkString(",\n")
-        val curveRows = (1 to 4).map { r =>
-          s"""SELECT $r AS round,
-               (SELECT COUNT(*) FROM t$r) AS n_edges,
-               (SELECT COUNT(*) FROM t${r - 1})
-                 - (SELECT COUNT(*) FROM t$r) AS n_removed"""
-        }.mkString("\n          UNION ALL ")
-        s"""WITH t0 AS MATERIALIZED (
-          SELECT u, w FROM (
-            SELECT DISTINCT least(l_orderkey % 997, l_partkey % 997) AS u,
-                   greatest(l_orderkey % 997, l_partkey % 997) AS w
-            FROM lineitem WHERE l_orderkey % 997 <> l_partkey % 997)
-          WHERE ('0x' || substr(md5('e' || u || '_' || w), 1, 8))::BIGINT % 16 = 0),
-        $peels,
-        curve AS ($curveRows)
-        SELECT CAST(round AS BIGINT) AS round, n_edges, n_removed
-        FROM curve ORDER BY round"""
-      }),
-
-    // ---- k-CORE PEELING CURVE (k = 3): iteratively remove vertices of
-    // degree < k with their edges until the 3-core remains, reporting the
-    // per-round (vertices kept, edges kept, vertices removed) — the
-    // standard density filter before community detection / influence
-    // analysis, and the graph family's "how much of this crawl graph is
-    // structurally dense" scorecard beside q73's static degree histogram.
-    // Edges are the q184 key graph, CANONICALIZED to undirected
-    // simple edges (least/greatest + distinct, self-loops dropped) so
-    // degree counts are the textbook ones.
-    //
-    // Scale/shape: each round is ONE degree aggregate (a map-side-
-    // combinable count over 2|E| endpoint rows) + TWO left-semi joins
-    // back to the edge list, with the surviving edge set checkpointed
-    // per round (the PageRank loop discipline — lineage stays flat).
-    // The per-round stats are 1-row aggregate pulls (the I3 bounded-pull
-    // pattern; 10 rounds = 10 longs on the driver). ROUNDS = 10 is a
-    // fixed cap like PageRank's: the curve after stabilization repeats
-    // the fixed point, so the output stays 10 rows and both engines
-    // agree without a convergence side-channel.
-    ("q189_kcore_peel",
-      (s: SparkSession, dir: String) => {
-        import s.implicits._
-        val k = 3
-        val rounds = 10
-        var edges = t(s, dir, "lineitem").select(
-          least(col("l_orderkey") % 997, col("l_partkey") % 1200).as("u"),
-          greatest(col("l_orderkey") % 997, col("l_partkey") % 1200).as("w"))
-          .filter(col("u") =!= col("w")).distinct()
-          .localCheckpoint()
-        var prev = edges
-        val curve = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, Long, Long)]
-        var r = 1
-        while (r <= rounds && (curve.isEmpty || curve.last._4 > 0L)) {
-          val deg = edges.select(col("u").as("v"))
-            .unionByName(edges.select(col("w").as("v")))
-            .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-          val stats = deg.agg(count(lit(1)), sum(when(col("deg") >= k, 1L)
-            .otherwise(0L))).head()
-          val (nBefore, nKeep) =
-            (stats.getLong(0), if (stats.isNullAt(1)) 0L else stats.getLong(1))
-          val keep = deg.filter(col("deg") >= k).select(col("v"))
-          val next = edges
-            .join(keep.select(col("v").as("u")), Seq("u"), "left_semi")
-            .join(keep.select(col("v").as("w")), Seq("w"), "left_semi")
-            .localCheckpoint()
-          Scoped.free(prev)
-          prev = next
-          edges = next
-          curve += ((r.toLong, nKeep, next.count(), nBefore - nKeep))
-          r += 1
-        }
-        Scoped.free(prev)
-        // a round that removed nothing IS the fixed point: every later
-        // round repeats it by construction (the degree aggregate over an
-        // unchanged edge set is unchanged), so the remaining curve rows
-        // are filled driver-side without running no-op jobs — the output
-        // is bit-identical to the always-10-jobs formulation (the spec
-        // pins post-stabilization constancy; the oracle still unrolls
-        // all 10 rounds and agrees)
-        val fp = curve.last
-        while (curve.length < rounds)
-          curve += ((curve.length + 1L, fp._2, fp._3, 0L))
-        curve.toSeq.toDF("round", "n_vertices", "n_edges", "n_removed")
-          .orderBy(col("round"))
-      },
-      Some {
-        // fixed-round UNROLLED peel (a recursive CTE may reference itself
-        // only once per step; the peel needs the edge set twice — for
-        // degrees and for the semi-joins — so the 10 rounds are generated
-        // as chained CTEs instead). Every stage is MATERIALIZED: left to
-        // inlining, each round's ~3 references to its predecessor expand
-        // the plan 3^10-fold and the leaf scans exhaust file handles.
-        val peels = (1 to 10).map { r =>
-          val (p, c) = (s"e${r - 1}", s"e$r")
-          s"""deg$r AS MATERIALIZED (SELECT v, COUNT(*) AS d FROM (
-               SELECT u AS v FROM $p UNION ALL SELECT w AS v FROM $p)
-             GROUP BY v),
-           keep$r AS MATERIALIZED (SELECT v FROM deg$r WHERE d >= 3),
-           $c AS MATERIALIZED (SELECT u, w FROM $p
-             WHERE u IN (SELECT v FROM keep$r)
-               AND w IN (SELECT v FROM keep$r)),
-           row$r AS (SELECT $r AS round,
-             (SELECT COUNT(*) FROM keep$r) AS n_vertices,
-             (SELECT COUNT(*) FROM e$r) AS n_edges,
-             (SELECT COUNT(*) FROM deg$r) - (SELECT COUNT(*) FROM keep$r)
-               AS n_removed)"""
-        }.mkString(",\n          ")
-        val rows = (1 to 10).map(r => s"SELECT * FROM row$r")
-          .mkString("\n          UNION ALL ")
-        s"""WITH e0 AS MATERIALIZED (
-            SELECT DISTINCT least(l_orderkey % 997, l_partkey % 1200) AS u,
-              greatest(l_orderkey % 997, l_partkey % 1200) AS w
-            FROM lineitem
-            WHERE l_orderkey % 997 <> l_partkey % 1200),
-          $peels
-          SELECT CAST(round AS BIGINT) AS round,
-            CAST(n_vertices AS BIGINT) AS n_vertices,
-            CAST(n_edges AS BIGINT) AS n_edges,
-            CAST(n_removed AS BIGINT) AS n_removed
-          FROM ($rows) ORDER BY round"""
-      }),
-
     // ---- CLI surface, end-to-end (VERDICT r16 #6): the full RankPages
     // stage A→D chain — wiki-markup TEXT corpus → offset-bridge ingest
     // (S1) → title/link extraction (P1/P2) → graph build with dead-link
@@ -1744,7 +928,6 @@ object CorpusSearch {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
     require(topK >= 20, s"topK must be >= 20, got $topK")
-    graft.functions.GraftFunctions.register(s)
     // the query BATCH as a relation (1 row here; production fuses many
     // queries per pass) — rank windows partition by its attribute, which
     // unlike a literal query id cannot be constant-folded out of the
@@ -1837,7 +1020,6 @@ object CorpusSearch {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
     require(topK >= 20, s"topK must be >= 20, got $topK")
-    graft.functions.GraftFunctions.register(s)
     val qtab = probes.toDF("query_id", "term", "qvec_id")
     val docs = t(s, dir, "documents")
     val n = docs.count() // driver-side metadata agg, like ref A2

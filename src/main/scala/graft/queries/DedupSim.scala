@@ -135,7 +135,7 @@ object DedupSim {
     * batch fingerprint identically (the cdcChunkHashArray contract).
     * The gram hashes come from the native fused [[graft.functions
     * .GramHash60]] kernel (bit-parity with the portable HOF pinned by
-    * GramHash60Spec; consumers must have GraftFunctions registered),
+    * GramHash60Spec; Session.build registers `gram_hash60`),
     * bound ONCE as a transform lambda VALUE (q111 lesson) for the
     * window-min pass. Docs with < 7 alpha tokens carry an empty array
     * (no window fits). */
@@ -161,7 +161,6 @@ object DedupSim {
     * signatures are defined over md5(shingle-string) 32-bit arithmetic
     * (the pinned portable contract, VERDICT r15/r16). */
   private def shingleHashes(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     explodeLean(
       t(s, dir, "documents").select(col("doc_id"),
         expr("regexp_extract_all(text, '[a-zA-Z]+', 0)").as("ws"))
@@ -190,7 +189,7 @@ object DedupSim {
     * other occurrence's gram positions merge into (doc_id, s_tok,
     * e_tok) spans. Shared by q207 (the positional span report) and
     * q209 (the cleaned-corpus rebuild). `toks` must carry (doc_id, tk:
-    * array<string>); caller must have GraftFunctions registered.
+    * array<string>).
     *
     * Shape: map-side native fingerprinting → checkpointed two-consumer
     * gram table → COMBINABLE min(struct) canonical aggregate (never a
@@ -951,7 +950,6 @@ object DedupSim {
     // probe set's ground truth) and ONE built index; only the probed
     // cell set differs per config
     import graft.similarity.Ivf
-    graft.functions.GraftFunctions.register(s)
     val e = t(s, dir, "embeddings")
     val qvec = e.filter(col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0) // driver artifact: probe cells
@@ -1087,8 +1085,8 @@ object DedupSim {
 
   /** The DuckDB twin of [[pcaDeflation]] — two recursive walks in one
     * WITH RECURSIVE; the shared stages are MATERIALIZED so the second
-    * recursion cannot re-expand the covariance chain per hop (the q189
-    * CTE-inlining lesson). */
+    * recursion cannot re-expand the covariance chain per hop (DuckDB
+    * inlines a plain CTE at every reference). */
   private val pcaDeflationSql: String =
     s"""WITH RECURSIVE $covGridCtes,
         fullcov AS MATERIALIZED (SELECT i, j, cov6 FROM cov
@@ -1422,7 +1420,6 @@ object DedupSim {
     // ---- brute-force cosine top-k ANN baseline
     ("q35_cosine_topk",
       (s: SparkSession, dir: String) => {
-        graft.functions.GraftFunctions.register(s)
         val e = t(s, dir, "embeddings")
         val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
         e.filter(col("vec_id") =!= 0)
@@ -1446,7 +1443,6 @@ object DedupSim {
     // neighbor cells (Hamming-1 on the sign bits).
     ("q37_ann_ivf",
       (s: SparkSession, dir: String) => {
-        graft.functions.GraftFunctions.register(s)
         val e = t(s, dir, "embeddings")
         val cell = (0 until 8).map(j =>
           expr(s"cast(element_at(embedding, ${j + 1}) > 0 as int) * ${1 << j}"))
@@ -1486,7 +1482,6 @@ object DedupSim {
       val nbits = Ivf.DefaultBits
       val dims = Ivf.DefaultDims
       (s: SparkSession, dir: String) => {
-        graft.functions.GraftFunctions.register(s)
         val e = t(s, dir, "embeddings")
         val qvec = e.filter(col("vec_id") === 0)
           .select("embedding").head().getSeq[Float](0)
@@ -1569,7 +1564,6 @@ object DedupSim {
     ("q36_embedding_neardup",
       (s: SparkSession, dir: String) => {
         import graft.similarity.Ivf
-        graft.functions.GraftFunctions.register(s)
         val e0 = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"), col("label"))
         val planted = e0.filter(col("vec_id") % 10 === 0)
           .select((col("vec_id") + 1000000000000L).as("vec_id"),
@@ -1622,7 +1616,6 @@ object DedupSim {
     // generator that bounds the corpus side at 100 TB.
     ("q74_knn_join",
       (s: SparkSession, dir: String) => {
-        graft.functions.GraftFunctions.register(s)
         val e = t(s, dir, "embeddings")
         val q = e.filter(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -1690,8 +1683,7 @@ object DedupSim {
         // candidate PRE-FILTER before verification: only shingles of
         // corpus docs that banded with some delta doc enter the verify
         // join — without this, the whole corpus shingle table shuffles
-        // even when cand names a handful of ids (the merge-pre-filter
-        // pattern from InvertedIndex.merge)
+        // even when cand names a handful of ids
         val candIds = cand.select(col("id_corpus")).distinct()
         val shCc = shC.select(col("doc_id").as("id_corpus"), col("shingle"))
           .join(broadcast(candIds), Seq("id_corpus"), "left_semi")
@@ -2084,7 +2076,6 @@ object DedupSim {
     ("q112_semantic_dedup",
       (s: SparkSession, dir: String) => {
         import graft.similarity.KMeans
-        graft.functions.GraftFunctions.register(s)
         def r4(c: org.apache.spark.sql.Column) = floor(c * 1e4 + 0.5) / 1e4
         def augOf() = {
           val e0 = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
@@ -2169,7 +2160,6 @@ object DedupSim {
       val dims = Ivf.DefaultDims
       (s: SparkSession, dir: String) => {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.GraftFunctions.register(s)
         val e = t(s, dir, "embeddings")
         val qvec = e.filter(col("vec_id") === 0)
           .select("embedding").head().getSeq[Float](0)
@@ -2681,7 +2671,6 @@ object DedupSim {
       val dims = Ivf.DefaultDims
       (s: SparkSession, dir: String) => {
         import graft.similarity.KMeans
-        graft.functions.GraftFunctions.register(s)
         val e = t(s, dir, "embeddings")
         def eqOf() = e.select(col("vec_id"), KMeans.quantCol(col("embedding")).as("eq"))
         val eqCp = eqOf().localCheckpoint()
@@ -2760,7 +2749,6 @@ object DedupSim {
     ("q136_dedup_signal_matrix",
       (s: SparkSession, dir: String) => {
         import graft.similarity.Ivf
-        graft.functions.GraftFunctions.register(s)
         val grid = 1000000000000L
         val d0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
         val pd = d0.unionByName(d0.filter(col("doc_id") % 6 === 0)
@@ -2846,7 +2834,6 @@ object DedupSim {
     // precedent for driver-bounded iteration).
     ("q144_mmr_rerank",
       (s: SparkSession, dir: String) => {
-        graft.functions.GraftFunctions.register(s)
         import s.implicits._
         val e = t(s, dir, "embeddings")
         val probe = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
@@ -3172,7 +3159,6 @@ object DedupSim {
     ("q161_knn_label_eval",
       (s: SparkSession, dir: String) => {
         import graft.similarity.Ivf
-        graft.functions.GraftFunctions.register(s)
         val e0 = t(s, dir, "embeddings")
         // the cell count must GROW with the corpus (the q34→q126 width
         // lesson — a fixed 16-cell space measured 0.90×-linear at sf1 on
@@ -3264,7 +3250,6 @@ object DedupSim {
     // IVF candidate generation as q38 — the eval shape is unchanged.
     ("q169_dim_truncation_eval",
       (s: SparkSession, dir: String) => {
-        graft.functions.GraftFunctions.register(s)
         val e = t(s, dir, "embeddings")
         val probes = e.filter(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -3461,7 +3446,6 @@ object DedupSim {
         // Portable.explodeLean's doc). Set intersections then run row-
         // local (array_intersect), replacing r15's first-cut 19M-row
         // verify shuffle+groupBy (sf1 A/B in SCALING.md).
-        graft.functions.GraftFunctions.register(s)
         val docsh = aug
           .select(col("doc_id"),
             expr("regexp_extract_all(text, '[a-zA-Z]+', 0)").as("ws"))
@@ -3561,7 +3545,6 @@ object DedupSim {
     ("q179_hard_negatives",
       (s: SparkSession, dir: String) => {
         import graft.similarity.Ivf
-        graft.functions.GraftFunctions.register(s)
         val e0 = t(s, dir, "embeddings")
         val bits = graft.core.BlockPolicy.srpBits(e0.count())
         val base = e0.withColumn("cell",
@@ -3655,7 +3638,6 @@ object DedupSim {
     // checkpointed fingerprint sets — no post-join aggregation.
     ("q181_winnowing_overlap",
       (s: SparkSession, dir: String) => {
-        graft.functions.GraftFunctions.register(s) // winnowFpsExpr kernel
         val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
         val filler = expr("concat_ws(' ', transform(sequence(1, 64), " +
           "i -> concat('y', char(97 + (i - 1) % 26), char(97 + (i - 1) div 26))))")
@@ -4046,7 +4028,6 @@ object DedupSim {
     // linear in corpus tokens at 100 TB.
     ("q207_dedup_span_excision",
       (s: SparkSession, dir: String) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
         val toks = docs
           .select(col("doc_id"), col("text"), split(col("text"), " ").as("tk"))
@@ -4118,7 +4099,6 @@ object DedupSim {
     // corpus pass stays one scan.
     ("q209_dedup_span_rebuild",
       (s: SparkSession, dir: String) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
         val toks = docs
           .select(col("doc_id"), col("text"), split(col("text"), " ").as("tk"))
@@ -4193,7 +4173,6 @@ object DedupSim {
     // this replaces is quadratic in documents and never appears.
     ("q214_neardup_span_align",
       (s: SparkSession, dir: String) => {
-        graft.functions.GraftFunctions.register(s)
         val K = 5    // seed gram width
         val G = 3L   // max uncovered run between chained seeds
         val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
@@ -4385,7 +4364,6 @@ object DedupSim {
     * the helper's explode_outer shape is exempt from that rule and the
     * arrays are null-element-free. */
   private[graft] def q252SourceShingles(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     explodeLean(
       t(s, dir, "documents")
         .select(col("source"),

@@ -981,7 +981,8 @@ object Events {
     // cents→unit grid ([[binnedEvents]] — the shared builder, third
     // consumer). At fixture scales diff·10⁴ ≤ n_a·n_b·10⁴ < 2⁶³ with
     // headroom; a 100 TB run moves the final cross-products to double
-    // after the same exact per-type folds (q222's note).
+    // after the same exact per-type folds, so only that last multiply
+    // rounds.
     //
     // Scale: one combinable (type, bin) count, then everything runs on
     // the VALUE-DOMAIN-BOUNDED bin table — the cumulative range join is
@@ -1154,8 +1155,9 @@ object Events {
     // same single IEEE division both engines, no truncation-direction
     // hazard on negative dy); the median is the LOWER median picked by
     // a deterministic (slope, day_i, day_j) rank inside a type-
-    // partitioned window. OLS rides the six-moment integer fold
-    // (q222's covariance trick, one final IEEE division).
+    // partitioned window. OLS rides a six-moment exact BIGINT fold (the
+    // covariance numerator n·Σxy − Σx·Σy, so partition order cannot
+    // move a bit) with one final IEEE division.
     //
     // Scale: one combinable (type, day) count; pairs and windows run
     // on |types|·|days|² bounded rows.
@@ -1614,7 +1616,8 @@ object Events {
     // Scale: the transition table is ≤ |types|² rows (one user-
     // partitioned lag window builds it — q243's shape); each of the 8
     // value steps is one broadcast-sized join + fold on that table.
-    // Oracle: 8 unrolled MATERIALIZED CTEs (the q189/q224 pattern).
+    // Oracle: 8 unrolled MATERIALIZED CTEs (DuckDB inlines a plain CTE
+    // at every reference, which re-expands an unrolled chain per step).
     ("q247_absorbing_steps",
       (s: SparkSession, dir: String) => {
         val horizon = 8
@@ -1882,13 +1885,12 @@ object Events {
     // this: does yesterday predict today once you're past both): the
     // Pearson correlation of (y_d, y_{d+k}) over calendar-day lag
     // pairs (absent days simply don't pair — lag is CALENDAR days,
-    // not row adjacency). Exactness is q222's assortativity
-    // discipline verbatim: the five moment sums are exact BIGINT
-    // folds, the correlation is formed as (n·Σab − Σa·Σb) /
-    // (√(n·Σa²−Σa²̂) · √(n·Σb²−Σb²̂)) with each variance cast to
-    // double separately (their PRODUCT can exceed int64 — the q222
-    // shape avoids it) — IEEE sqrt is correctly rounded, so the chain
-    // is bit-identical across engines. r can be negative and −1 ‱ is
+    // not row adjacency). Exactness comes from integer moments: the
+    // five moment sums are exact BIGINT folds, the correlation is
+    // formed as (n·Σab − Σa·Σb) / (√(n·Σa²−Σa²̂) · √(n·Σb²−Σb²̂)) with
+    // each variance cast to double separately (their PRODUCT can exceed
+    // int64, so it is never formed in BIGINT) — IEEE sqrt is correctly
+    // rounded, so the chain is bit-identical across engines. r can be negative and −1 ‱ is
     // a legal value, so degenerate cases (no pairs, or zero variance
     // on either side) sentinel acf4 to −20001, outside [−10⁴, 10⁴]
     // (the q251 convention).

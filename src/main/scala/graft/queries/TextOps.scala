@@ -468,7 +468,6 @@ object TextOps {
     // shuffle into the per-(bench,doc) count.
     ("q77_contamination",
       (s: SparkSession, dir: String) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = t(s, dir, "documents")
         // per-doc gram dedup happens INSIDE the row (array_distinct on the
         // gram array, before the explode): doc_id is unique per input row,
@@ -1570,7 +1569,6 @@ object TextOps {
     // left-semi-restricted minority).
     ("q152_decontaminate_spans",
       (s: SparkSession, dir: String) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = t(s, dir, "documents")
         val bench = docs.filter(col("doc_id") % 53 === 0)
           .select(expr(
@@ -2823,7 +2821,6 @@ object TextOps {
     // 0.25× — SCALING.md). Output is |sources| rows.
     ("q193_gram_novelty",
       (s: SparkSession, dir: String) => {
-        graft.functions.GraftFunctions.register(s)
         val grams = t(s, dir, "documents")
           .select(col("source"),
             expr("regexp_extract_all(lower(text), '[a-z]+', 0)").as("ws"))
@@ -2884,7 +2881,6 @@ object TextOps {
     // Output is |sources|²/2 rows.
     ("q205_source_overlap",
       (s: SparkSession, dir: String) => {
-        graft.functions.GraftFunctions.register(s)
         val sg = t(s, dir, "documents")
           .select(col("source"),
             expr("regexp_extract_all(lower(text), '[a-z]+', 0)").as("ws"))

@@ -2,7 +2,6 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 /** IVF-style approximate nearest-neighbor search over an embedding column
   * (builder-prompt "similarity search" scale path; complements q35's
@@ -40,17 +39,15 @@ object Ivf {
   /** Cell id column: SRP sign bits, ⟨v, p_j⟩ > 0 for j < nbits — the fused
     * codegen'd [[graft.functions.SrpCell]] expression (one pass over the
     * vector, nbits running dots; bit- and NULL-compatible with the unfused
-    * per-plane `element_at` sum it replaced). Requires
-    * `GraftFunctions.register` on the session — [[buildIndex]] does it. */
+    * per-plane `element_at` sum it replaced). `srp_cell` resolves through
+    * the session's function registry, which [[graft.Session.build]] fills. */
   def cellCol(vecCol: String, nbits: Int, dims: Int): org.apache.spark.sql.Column =
     expr(s"srp_cell($vecCol, $nbits, $dims)")
 
   /** Attach the cell id. */
   def buildIndex(embeddings: DataFrame, vecCol: String = "embedding",
-      nbits: Int = DefaultBits, dims: Int = DefaultDims): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
+      nbits: Int = DefaultBits, dims: Int = DefaultDims): DataFrame =
     embeddings.withColumn("cell", cellCol(vecCol, nbits, dims))
-  }
 
   /** Persist the index partitioned by cell (hive-style) — probes become
     * partition-pruned scans. */
@@ -99,7 +96,6 @@ object Ivf {
   def query(spark: SparkSession, index: DataFrame, q: Seq[Float], k: Int,
       nprobe: Int = 8, nbits: Int = DefaultBits,
       vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    GraftFunctions.register(spark)
     val cells = probeCellsForQuery(q, nbits, nprobe)
     index
       .filter(col("cell").isin(cells: _*))
@@ -113,7 +109,6 @@ object Ivf {
   /** Exact brute-force top-k (the recall baseline). */
   def bruteForce(spark: SparkSession, embeddings: DataFrame, q: Seq[Float],
       k: Int, vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    GraftFunctions.register(spark)
     embeddings
       .withColumn("qv", array(q.map(v => lit(v)): _*))
       .withColumn("sim", expr(s"cosine_sim($vecCol, qv)"))

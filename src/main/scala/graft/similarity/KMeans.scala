@@ -46,18 +46,11 @@ object KMeans {
     * assignment loop ran INTERPRETED, allocating a zipped array per
     * centroid per row — the catalog's one non-codegen hot loop once
     * `semdedupK` scales k with the corpus (q112 at sf1: k=44, measured
-    * 36 s of which the fit+assign folds dominate; guide §4). All methods
-    * here self-register the function (idempotent), so callers need no
-    * GraftFunctions.register of their own. */
+    * 36 s of which the fit+assign folds dominate; guide §4). `l2_sq`
+    * resolves through the session's function registry, which
+    * [[graft.Session.build]] fills. */
   private def distTo(eq: Column, cent: Array[Long]): Column =
     call_function("l2_sq", eq, array(cent.map(lit(_)): _*))
-
-  /** `l2_sq` resolves through the session function registry; every entry
-    * point registers first (cheap, idempotent) so Column-only callers
-    * (distArray/nearestCol consumers) work in unconfigured sessions. */
-  private def ensureRegistered(): Unit =
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
 
   /** Exact integer L2² distances of a quantized (sub)vector column to
     * every centroid, as one array Column. PQ callers (q131) alias this to
@@ -65,17 +58,14 @@ object KMeans {
     * attribute and the k folds evaluate once (HOF lambdas get no
     * cross-expression CSE — fusing min+position inline would double the
     * fold work). */
-  def distArray(eqSub: Column, cents: Array[Array[Long]]): Column = {
-    ensureRegistered()
+  def distArray(eqSub: Column, cents: Array[Array[Long]]): Column =
     array(cents.map(c => distTo(eqSub, c)): _*)
-  }
 
   /** Nearest-centroid id of a quantized (sub)vector column as a bare
     * Column — the map-only encode primitive product quantization composes
     * per subspace (q130/q131). Same exact-integer L2² and first-min
     * tie-break as [[assign]]. */
   def nearestCol(eqSub: Column, cents: Array[Array[Long]]): Column = {
-    ensureRegistered()
     val dists = distArray(eqSub, cents)
     (array_position(dists, array_min(dists)) - 1).cast("long")
   }
@@ -84,7 +74,6 @@ object KMeans {
     * the smallest cluster id (`array_position` returns the FIRST index of
     * the minimum). Map-only. */
   def assign(eq: DataFrame, cents: Array[Array[Long]], eqCol: String = "eq"): DataFrame = {
-    graft.functions.GraftFunctions.register(eq.sparkSession)
     val dists = array(cents.map(c => distTo(col(eqCol), c)): _*)
     eq.withColumn("dists", dists)
       .withColumn("dist", array_min(col("dists")))

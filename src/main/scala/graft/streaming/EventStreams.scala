@@ -276,7 +276,6 @@ object EventStreams {
     // q77 probe after r17 (`benchGrams.gram` is the LONG fingerprint,
     // not the gram string) — stream and batch screen on bit-identical
     // keys, the cdcChunkHashArray twin contract
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val grams13 = expr("gram_hash60(ws, 13)")
     val benchSet = broadcast(
       benchGrams.agg(collect_set(col("gram")).as("bench_set")))
@@ -306,7 +305,6 @@ object EventStreams {
     * Tokenization is q207's exact split-on-space. */
   def exactSubstrScreenStream(docs: DataFrame, dupGrams: DataFrame,
       k: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val dupSet = broadcast(
       dupGrams.agg(collect_set(col("gram")).as("dup_set")))
     docs.withColumn("tk", split(col("text"), " "))
@@ -801,7 +799,6 @@ object EventStreams {
     * with < 7 alpha tokens report n_fps = 0 (explode_outer keeps them). */
   def winnowMatchStream(docs: DataFrame, corpusFps: DataFrame,
       horizon: String = "1 hour"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession) // fps kernel
     val fp = docs
       .withColumn("ws", expr("regexp_extract_all(text, '[a-zA-Z]+', 0)"))
       .withColumn("fps", expr(graft.queries.DedupSim.winnowFpsExpr))

@@ -30,6 +30,18 @@ class GraftExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("Session.build registers graft's SQL functions on the session it returns") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val names = Seq("cosine_sim", "srp_cell", "l2_sq", "gram_hash60")
+    val reg = spark.sessionState.functionRegistry
+    // other specs may have registered them on the shared session already
+    names.foreach(n => reg.dropFunction(FunctionIdentifier(n)))
+    assert(names.forall(n => !reg.functionExists(FunctionIdentifier(n))))
+    val s = Session.build(cpus = 4, logLevel = "ERROR")
+    assert(s eq spark, "getOrCreate hands back the live session")
+    names.foreach(n => assert(reg.functionExists(FunctionIdentifier(n)), n))
+  }
+
   test("cosine_sim arity is validated with a message, not an index crash") {
     graft.functions.GraftFunctions.register(spark)
     def messageChain(t: Throwable): String =

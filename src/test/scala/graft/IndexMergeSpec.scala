@@ -17,11 +17,13 @@ class IndexMergeSpec extends SparkSpec {
     "<title>2</title> [[1]] [[3]] <text>beta beta delta</text>",
     "<title>4</title> <text>gamma epsilon beta</text>")
 
-  lazy val docs: DataFrame = {
+  lazy val corpusFile: String = {
     val f = Files.createTempFile("merge", ".txt")
     Files.writeString(f, corpus.mkString("\n") + "\n")
-    WikiCorpus.ingest(spark, f.toString).cache()
+    f.toString
   }
+
+  lazy val docs: DataFrame = WikiCorpus.ingest(spark, corpusFile).cache()
 
   test("merge(build(A), B) == build(A ∪ B), postings and offsets included") {
     val a = docs.filter(col("title") =!= "2")
@@ -55,6 +57,26 @@ class IndexMergeSpec extends SparkSpec {
     val zeta = got.find(_._1 == "zeta").get
     assert(zeta._2 === 1 && zeta._3.head._2 === 3, zeta)
     assert(got === canon(InvertedIndex.build(all)))
+  }
+
+  test("the delta is tokenized once: one per-title UDF Generate in the executed plan") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // a checkpointed index, as q59 passes it: only the delta's UDF remains.
+    // The delta is read uncached, as from files: AQE reuses no shuffle
+    // above a cached relation's scan.
+    val fresh = WikiCorpus.ingest(spark, corpusFile)
+    val existing = InvertedIndex.build(fresh.filter(col("title") =!= "2"),
+      dfCutoff = Int.MaxValue).localCheckpoint()
+    val merged = InvertedIndex.merge(existing, fresh.filter(col("title") === "2"))
+    merged.collect()
+    val plan = merged.queryExecution.executedPlan
+    val gens = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case g: GenerateExec if g.generator.exists(_.isInstanceOf[ScalaUDF]) => g
+    }
+    assert(gens.size === 1, plan.toString)
+    graft.core.Scoped.free(existing)
   }
 
   test("empty delta is the identity (minus the cutoff re-application)") {

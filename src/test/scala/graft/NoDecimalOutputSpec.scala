@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, MapType, St
   * becomes a sweep-the-catalog gate rather than a code-review memory.
   * This spec invokes every builder and reads only the schema — the spec
   * itself takes no result action, but builders whose BODIES run jobs
-  * (q189's peel loop, q191/q200's head pulls, q194's collect, q203's
+  * (q29's PageRank loop, q191/q200's head pulls, q194's collect, q203's
   * snapshot writes) do that work at build time, so the sweep is a
   * catalog-wide RESOLUTION check too — a query whose plan no longer
   * analyzes (or whose build-time actions break) fails here before the

@@ -337,35 +337,6 @@ class PipelineOpsSpec extends SparkSpec {
     }
   }
 
-  test("q184: labels equal an exact synchronous-LPA reference; sizes partition") {
-    val edges = spark.read.parquet(s"$dir/lineitem.parquet")
-      .select((col("l_orderkey") % 997).as("src"), (col("l_partkey") % 1200).as("dst"))
-      .distinct().collect().map(r => (r.getLong(0), r.getLong(1)))
-    val nbrs = (edges ++ edges.map(_.swap)).groupBy(_._1)
-      .map { case (v, es) => v -> es.map(_._2) }
-    val verts = nbrs.keySet
-    var label = verts.map(v => v -> v).toMap
-    for (_ <- 1 to 5)
-      label = verts.map { v =>
-        // most frequent neighbor label, ties to the smallest
-        val best = nbrs(v).map(label).groupBy(identity).toSeq
-          .map { case (l, o) => (o.length, l) }
-          .minBy { case (c, l) => (-c, l) }
-        v -> best._2
-      }.toMap
-    val got = SparkEntry.queries("q184_lpa_communities")(spark, dir).collect()
-      .map(r => (r.getAs[String]("title"), r.getAs[Long]("community"),
-        r.getAs[Long]("comm_size")))
-    assert(got.length === verts.size)
-    got.foreach { case (title, comm, _) =>
-      assert(comm === label(title.drop(1).toLong), s"label($title)")
-    }
-    val sizes = got.groupBy(_._2).map { case (c, g) => c -> g.length.toLong }
-    got.foreach { case (t, c, sz) => assert(sz === sizes(c), s"size($t)") }
-    assert(sizes.values.sum === verts.size.toLong, "communities partition")
-    assert(sizes.size > 1, "the key graph is not one community")
-  }
-
   test("q185: the threshold curve is complete and monotonically non-increasing") {
     val rows = SparkEntry.queries("q185_dedup_threshold_curve")(spark, dir).collect()
       .map(r => (r.getAs[Long]("threshold"), r.getAs[Long]("n_pairs"),
@@ -445,30 +416,6 @@ class PipelineOpsSpec extends SparkSpec {
     val lnk4 = ((kn - kn % kd) / kd).toLong
     assert(rows.head._5 === beta4, "beta matches the exact recompute")
     assert(rows.head._6 === lnk4, "lnK matches the exact recompute")
-  }
-
-  test("q189: peeling curve is monotone, stabilizes, and the survivors form a 3-core") {
-    val rows = SparkEntry.queries("q189_kcore_peel")(spark, dir).collect()
-      .map(r => (r.getAs[Long]("round"), r.getAs[Long]("n_vertices"),
-        r.getAs[Long]("n_edges"), r.getAs[Long]("n_removed")))
-      .sortBy(_._1)
-    assert(rows.map(_._1).toSeq === (1L to 10L))
-    rows.sliding(2).foreach { case Array(a, b) =>
-      assert(b._2 <= a._2 && b._3 <= a._3,
-        s"peeling can only shrink the graph at round ${b._1}")
-      // once a round removes nothing, the curve is the fixed point
-      if (a._4 == 0L)
-        assert((b._2, b._3, b._4) === (a._2, a._3, 0L),
-          s"round ${b._1} moved after stabilization")
-    }
-    rows.foreach { r => assert(r._4 >= 0L, s"round ${r._1} negative removal") }
-    // the fixed point is a real 3-core: recompute degrees over the edge
-    // set the last round's semantics imply and check min degree >= 3
-    if (rows.last._2 > 0L) {
-      assert(rows.last._4 === 0L, "10 rounds must stabilize the fixture")
-      assert(rows.last._3 * 2L >= rows.last._2 * 3L,
-        "handshake: 2|E| >= 3|V| in a 3-core")
-    }
   }
 
   test("q190: rule scorecard is a partition of the corpus and r_all is the conjunction bound") {

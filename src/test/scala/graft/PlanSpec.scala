@@ -298,42 +298,23 @@ class PlanSpec extends SparkSpec {
       "the top-3 WindowGroupLimit lost its anchor_id partitionSpec")
   }
 
-  test("sanctioned unpartitioned-window whitelist: exactly the two bounded sites") {
+  test("sanctioned unpartitioned-window whitelist: exactly the one bounded site") {
     import org.apache.spark.sql.execution.window.WindowExec
     // The bench gate (Bench.scala) asserts <= 32 `No Partition Defined`
     // warnings per pass; this is its code-level anchor (VERDICT r8 #6).
-    // Exactly TWO sites are sanctioned, each with an in-code comment
-    // naming the bound that makes a single partition safe:
+    // Exactly ONE site is sanctioned, with an in-code comment naming the
+    // bound that makes a single partition safe:
     //   - q70 day-level cumsum (queries/Events.scala): input is the
-    //     per-DAY aggregate, bounded by calendar days;
-    //   - q67 vertex-rank (graph/Triangles.scala): input is the VERTEX
-    //     set, orders of magnitude smaller than the edge set that scales.
-    // Each must plan exactly ONE unpartitioned window — a second node
-    // appearing in either query, or a new site in any other query, is a
+    //     per-DAY aggregate, bounded by calendar days.
+    // It must plan exactly ONE unpartitioned window — a second node
+    // appearing in q70, or a new site in any other query, is a
     // regression (caught there by the departitioned-family test above
     // and the bench-log gate).
-    def countIn(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.sparkPlan.collect {
+    val n = SparkEntry.queries("q70_cumulative_users")(spark, dir)
+      .queryExecution.sparkPlan.collect {
         case w: WindowExec if w.partitionSpec.isEmpty => w
       }.size
-    def count(name: String): Int = countIn(SparkEntry.queries(name)(spark, dir))
-    assert(count("q70_cumulative_users") === 1,
-      "q70 must have exactly its one sanctioned day-level window")
-    // q67's vertex-rank window sits BEHIND an eager localCheckpoint()
-    // (Triangles.count materializes the oriented edges), so by the time
-    // the returned frame is planned the window has already executed and
-    // collapsed into a LogicalRDD leaf — the FINAL plan must show zero
-    // (VERDICT r9 #1: asserting 1 here was deterministically wrong). The
-    // site itself is pinned on the pre-checkpoint intermediate below; its
-    // RUNTIME execution count is bounded by the bench-log warning gate
-    // (Bench.scala: <= 32 `No Partition Defined` lines per pass).
-    assert(count("q67_triangle_count") === 0,
-      "q67's final plan must contain no live window — the vertex rank is pre-checkpoint")
-    val edges = spark.read.parquet(s"$dir/lineitem.parquet")
-      .select((org.apache.spark.sql.functions.col("l_orderkey") % 997).as("a"),
-        (org.apache.spark.sql.functions.col("l_partkey") % 997).as("b"))
-    assert(countIn(graft.graph.Triangles.rankPlanFor(edges)) === 1,
-      "the vertex-rank intermediate must plan exactly its one sanctioned window")
+    assert(n === 1, "q70 must have exactly its one sanctioned day-level window")
   }
 
   test("q113/q121: top-k candidate lists plan as distributed TakeOrdered, not global sort+rank") {

@@ -22,7 +22,7 @@ class SlopeCoverageSpec extends AnyFunSuite {
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("SCALING.md")),
       java.nio.charset.StandardCharsets.UTF_8)
     // Line-anchored ledger-row match (ADVICE r18): a query id appearing
-    // in PROSE (a cross-reference like "q241 scores q184's labeling")
+    // in PROSE (a cross-reference like "q25 keeps the dynamic policy")
     // must not satisfy the gate — only a real measured row of the shape
     // `| qNNN name | <number>` counts, in either the raw-key or the
     // first-underscore-to-space ledger spelling.
@@ -39,5 +39,20 @@ class SlopeCoverageSpec extends AnyFunSuite {
       "catalog queries with no SCALING.md slope row (measure sf0.1 vs " +
         "fixture_cache/sf1 with SPARK_GRAFT_ONLY and add a ledger row): " +
         missing.mkString(", "))
+  }
+
+  test("SCALING.md has no stale slope rows for queries no longer in the catalog") {
+    val scaling = new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("SCALING.md")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    // keyed on the q-number, not the name: re-measure rows may spell a
+    // query in short form ("| q178 containment (5-gram shingle sets) |")
+    val numbers = SparkEntry.queries.keySet.map(_.drop(1).takeWhile(_.isDigit).toInt)
+    val rows = "(?m)^\\| q([0-9]+)[^|]*\\| *[0-9]".r
+      .findAllMatchIn(scaling).map(_.group(1).toInt).toSeq
+    assert(rows.nonEmpty, "no ledger rows parsed from SCALING.md")
+    val stale = rows.filterNot(numbers).distinct.sorted
+    assert(stale.isEmpty,
+      "SCALING.md slope rows with no catalog query: " + stale.map("q" + _).mkString(", "))
   }
 }
